@@ -1,0 +1,5 @@
+import os
+import sys
+
+# the benchmark and the engine are imported from the root of the checkout
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))))
