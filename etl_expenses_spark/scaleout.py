@@ -31,21 +31,29 @@ from pyspark.sql import functions as F
 # Planned-partition-count cache (r14, VERDICT r13 #6): probing a frame's
 # partition count forces a physical-planning pass of its plan at build
 # time, on EVERY invocation — pure driver overhead that grows with plan
-# complexity. The count is a deterministic function of (session, logical
-# plan): for the scan-derived frames every call site passes, it is fixed
-# by the file listing and split size for the life of the session, so the
-# SECOND and later builds of the same query can reuse the first build's
+# complexity. For the scan-derived frames every call site passes, the
+# count is fixed by the logical plan (file listing included), the split
+# size and the session's width, so the SECOND and later builds of the same query can reuse the first build's
 # probe. Keyed by the canonicalized plan's semanticHash (JVM-side, no
-# physical planning); checkpointed/cached leaves hash per-instance, so
-# they simply miss and re-probe. Bounded: cleared wholesale if it ever
-# grows past _PROBE_CACHE_MAX (sessions here build a few hundred distinct
-# plans at most).
-_PROBE_CACHE: dict[tuple[str, int], int] = {}
+# physical planning) plus every setting the count depends on besides the
+# plan: the split-size and shuffle-width confs and the default
+# parallelism, so a conf change re-probes instead of aliasing.
+# Checkpointed/cached leaves hash per-instance, so they simply miss and
+# re-probe. Bounded: cleared wholesale if it ever grows past
+# _PROBE_CACHE_MAX (sessions here build a few hundred distinct plans at
+# most).
+_PROBE_CACHE: dict[tuple, int] = {}
 _PROBE_CACHE_MAX = 1024
+_PROBE_CONFS = (
+    "spark.sql.files.maxPartitionBytes",
+    "spark.sql.files.openCostInBytes",
+    "spark.sql.shuffle.partitions",
+)
 
 
 def _planned_partitions(df: DataFrame) -> int:
-    """``df``'s physical partition count, memoized per (session, plan).
+    """``df``'s physical partition count, memoized per (session, plan,
+    sizing confs).
 
     Uses ``QueryExecution.toRdd`` via py4j — the internal row RDD, no
     Python-serializer wrapper like ``df.rdd`` — and falls back to the
@@ -54,7 +62,13 @@ def _planned_partitions(df: DataFrame) -> int:
     if jdf is None:  # Spark Connect: no internals, no cheap cache key
         return df.rdd.getNumPartitions()
     qe = jdf.queryExecution()
-    key = (df.sparkSession.sparkContext.applicationId, qe.analyzed().semanticHash())
+    spark = df.sparkSession
+    key = (
+        spark.sparkContext.applicationId,
+        qe.analyzed().semanticHash(),
+        spark.sparkContext.defaultParallelism,
+        *(spark.conf.get(k) for k in _PROBE_CONFS),
+    )
     n = _PROBE_CACHE.get(key)
     if n is None:
         n = qe.toRdd().getNumPartitions()

@@ -17,8 +17,12 @@ rather than imperative loops.
 
 from __future__ import annotations
 
+import os
+import stat
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 # The driver-provided synthetic tables (TESTDATA.md).
 TESTDATA_TABLES = (
@@ -35,16 +39,30 @@ TESTDATA_TABLES = (
 )
 
 
+# load_table's schema memo: absolute path -> (file version + inference
+# confs, StructType). Only the schema is kept, never a DataFrame: each call
+# must build a fresh relation (fresh expression IDs) so that two loads of
+# one table can still be self-joined.
+_SCHEMAS: dict[str, tuple[tuple, StructType]] = {}
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Scan one testdata parquet table.
 
     Parquet scan → columnar vectorized reader, min/max stat pruning and
     predicate pushdown are automatic once filters are declared on the result.
 
-    ``events.ts`` is written as parquet TIMESTAMP(NANOS), which Spark's
-    reader rejects; we read nanos as long and truncate to microseconds —
-    the same truncation DuckDB's reader applies, so both engines see
-    identical values.
+    The testdata tiers store timestamps as INT64 TIMESTAMP(MICROS), not
+    adjusted to UTC. A file that stores parquet TIMESTAMP(NANOS), which
+    Spark's reader rejects, has the column read as long and truncated to
+    microseconds — the same truncation DuckDB's reader applies, so both
+    engines see identical values.
+
+    Schema inference costs a Spark job per read. For a local regular file
+    the inferred schema is remembered per file version (absolute path,
+    size, mtime, inode) and the parquet inference confs not pinned here,
+    and later reads pass it to the reader instead. Directories, URIs and
+    missing paths are inferred on every call.
     """
     # Engine semantics are pinned to UTC and must hold even on a caller's
     # vanilla session (the driver constructs its own SparkSession).
@@ -55,7 +73,27 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # session pinned to UTC, plain TIMESTAMP is value-identical and matches
     # what DuckDB's oracle sees.
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    path = f"{sf_dir}/{name}.parquet"
+    try:
+        st = os.stat(path) if os.path.isabs(path) else None
+    except OSError:
+        st = None
+    if st is None or not stat.S_ISREG(st.st_mode):
+        df = spark.read.parquet(path)
+    else:
+        stamp = (
+            st.st_size,
+            st.st_mtime_ns,
+            st.st_ino,
+            spark.conf.get("spark.sql.parquet.binaryAsString"),
+            spark.conf.get("spark.sql.parquet.int96AsTimestamp"),
+        )
+        hit = _SCHEMAS.get(path)
+        if hit is not None and hit[0] == stamp:
+            df = spark.read.schema(hit[1]).parquet(path)
+        else:
+            df = spark.read.parquet(path)
+            _SCHEMAS[path] = (stamp, df.schema)
     for f_ in df.schema.fields:
         if f_.name == "ts" and f_.dataType.typeName() in ("long", "bigint"):
             # integer div — float division would lose precision above 2^53 ns
@@ -73,7 +111,9 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
     This is the engine's catalog feed — the analog of the reference's Glue
     crawler + ``get_tables`` schema read-back
     (`/root/reference/ai_agent/lambda_function.py:22-36`), except schemas are
-    transactionally known from parquet footers instead of crawled.
+    transactionally known from parquet footers instead of crawled. Each
+    file's footer is read once per file version (see ``load_table``); every
+    call still re-points all views at fresh relations.
     """
     for t in TESTDATA_TABLES:
         load_table(spark, sf_dir, t).createOrReplaceTempView(t)

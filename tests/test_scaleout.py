@@ -8,6 +8,10 @@ re-built identical plan, and that distinct plans do not alias.
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.parquet as pq
+import pytest
 from pyspark.sql import functions as F
 
 from etl_expenses_spark import scaleout
@@ -61,3 +65,31 @@ def test_probe_matches_public_rdd_count(spark):
     for parts in (1, 2, 5):
         df = spark.range(0, 50, 1, parts)
         assert _planned_partitions(df) == df.rdd.getNumPartitions()
+
+
+@pytest.mark.parametrize(
+    "conf, value",
+    [
+        ("spark.sql.files.maxPartitionBytes", str(16 * 1024)),
+        ("spark.sql.files.openCostInBytes", "1024"),
+    ],
+)
+def test_probe_cache_rekeys_on_split_conf(spark, tmp_path, conf, value):
+    # the same scan plan splits differently once a sizing conf changes; a
+    # cache keyed on the plan alone would keep returning the old count
+    scaleout._PROBE_CACHE.clear()
+    path = str(tmp_path / "t.parquet")
+    rng = np.random.default_rng(0)
+    pq.write_table(pa.table({"k": rng.integers(0, 2**62, 20_000)}), path)
+    before = _planned_partitions(spark.read.parquet(path))
+    assert before == 1
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, value)
+    try:
+        df = spark.read.parquet(path)
+        truth = df.rdd.getNumPartitions()
+        assert truth > before
+        assert _planned_partitions(df) == truth
+    finally:
+        spark.conf.set(conf, old)
+    assert _planned_partitions(spark.read.parquet(path)) == before
