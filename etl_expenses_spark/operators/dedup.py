@@ -22,10 +22,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from etl_expenses_spark.caching import (
-    _BSP_ROWS_PER_PARTITION,
     bsp_checkpoint,
-    bsp_checkpoint_flagged,
-    bsp_checkpoint_sized,
+    bsp_iterate,
     small_state_rounds,
     track,
 )
@@ -118,10 +116,10 @@ def minhash_band_signatures(
     distinct runs before any reuse: array_min is duplicate-insensitive, so
     the minhash is unchanged and downstream consumers read the set as-is."""
     rows_per_band = num_perm // bands
-    # r13: the tokenize→hash→minhash projection is the measured ~100% of
-    # this operator's cost and is compute-bound per row; fan the input out
+    # the tokenize→hash→minhash projection is the measured ~100% of this
+    # operator's cost and is compute-bound per row; fan the input out
     # before it so a narrow scan (one small file / one delta shard) does
-    # not serialize the signature stage on a single task (guide §2.5).
+    # not serialize the signature stage on a single task
     df = fan_out(df, id_col)
     tok = df.select(F.col(id_col).alias("id"), tokens(text_col).alias("toks"))
     th = F.transform("toks", lambda x: F.xxhash64(x))
@@ -425,43 +423,43 @@ def connected_components(
     (alternating large-star/small-star, O(log d) rounds) — property-tested
     equivalent on random graphs.
 
-    The convergence probe (`limit(1).count()` per round) is one tiny driver
-    action per round, not a data collect; every heavy structure stays
-    distributed and persisted. Each round's labels are checkpointed via
-    caching.bsp_checkpoint (stats-safe eager localCheckpoint) so the
-    logical plan stays ONE round deep — without it the plan
-    doubles every iteration and Catalyst analysis time dominates the
-    actual shuffles by round ~6. The changed-flag is computed INSIDE the
-    update join and checkpointed with the labels, so the probe reads the
-    materialized flag instead of re-joining new labels against old (one
-    fewer shuffle per round).
+    The rounds run through ``caching.bsp_iterate``: each round's labels and
+    its changed flag, computed inside the update join, are materialized by
+    one checkpoint job that also counts the changed rows, and the next
+    round reads a stats-reset leaf, so the logical plan stays ONE round
+    deep. Round 1 is fused into the label initialization, so ``max_iters``
+    counts it. A graph that needs more than ``max_iters`` rounds (its
+    widest component's diameter plus one round that changes nothing)
+    raises ``RuntimeError`` rather than returning labels that have not
+    converged.
     """
-    sym, n_sym = bsp_checkpoint_sized(
+    # sized: pair batches are often tiny relative to the session width,
+    # and every round's join inherits this leaf's task count
+    sym = bsp_checkpoint(
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
         .union(edges.select(F.col(dst).alias("u"), F.col(src).alias("v")))
         .distinct(),
-        # checkpointed once (stats cannot compound) and SIZED (r14): pair
-        # batches are often tiny relative to the session width, and every
-        # round's join inherits this leaf's task count
-        return_rows=True,
+        sized=True,
     )
-    # r14 (guide §2): min-label rounds do O(|edges|) join+min work — when
-    # the whole edge relation is observed smaller than one healthy
-    # partition, every round's shuffles should run at ONE task, not the
-    # session width; AQE's parallelismFirst floor is scoped off for the
-    # loop's checkpoint jobs (restored on exit). At real graph scale the
-    # scope never activates.
+    # Min-label rounds do O(|edges|) join+min work: when the whole edge
+    # relation is small enough that its sized leaf is one partition
+    # (≤ caching._BSP_ROWS_PER_PARTITION rows), every round's shuffles
+    # should run at ONE task, not the session width, so AQE's
+    # parallelismFirst floor is scoped off for the loop (restored on exit).
+    # At real graph scale the scope never activates.
     with small_state_rounds(
-        sym.sparkSession, enabled=n_sym <= _BSP_ROWS_PER_PARTITION
+        sym.sparkSession, enabled=sym.rdd.getNumPartitions() <= 1
     ):
         # fused round 1: with identity labels, each node's neighbor-min is
         # just min(neighbor ids) — one groupBy over sym, no join needed yet
-        labels = (
+        labels = bsp_checkpoint(
             sym.groupBy("u")
             .agg(F.min("v").alias("mv"))
-            .select(F.col("u").alias("id"), F.least("u", "mv").alias("lbl"))
-        ).transform(bsp_checkpoint_sized)
-        for _ in range(max_iters - 1):
+            .select(F.col("u").alias("id"), F.least("u", "mv").alias("lbl")),
+            sized=True,
+        )
+
+        def step(labels: DataFrame, _round: int) -> DataFrame:
             nbr_min = (
                 sym.join(labels, sym["v"] == labels["id"])
                 .groupBy("u")
@@ -470,18 +468,22 @@ def connected_components(
             new_lbl = F.least(
                 labels["lbl"], F.coalesce(F.col("nbr_min"), labels["lbl"])
             )
-            new_labels, changed = bsp_checkpoint_flagged(
-                labels.join(nbr_min, labels["id"] == nbr_min["u"], "left")
-                .select(
-                    labels["id"],
-                    new_lbl.alias("lbl"),
-                    (new_lbl < labels["lbl"]).alias("chg"),
-                ),
-                "chg",
+            return labels.join(nbr_min, labels["id"] == nbr_min["u"], "left").select(
+                labels["id"],
+                new_lbl.alias("lbl"),
+                (new_lbl < labels["lbl"]).alias("changed"),
             )
-            labels = new_labels.drop("chg")
-            if changed == 0:
-                break
+
+        labels = bsp_iterate(
+            labels,
+            step,
+            max_rounds=max_iters - 1,
+            exhausted=f"connected_components: labels still changing after "
+            f"max_iters={max_iters} rounds — some component is wider than "
+            "the budget, so its labels are not its minimum yet. Raise "
+            "max_iters, or use connected_components_star for long chains.",
+            size_leaf=True,
+        )
     return labels.select("id", F.col("lbl").alias("cluster_id"))
 
 
@@ -492,7 +494,7 @@ def star_fold_components(
     node_col: str = "id",
 ) -> DataFrame:
     """Components of (star ∪ pairs) computed on the pair-sized
-    REPRESENTATIVE QUOTIENT GRAPH (r13, guide §2.3 — shuffle fewer bytes):
+    REPRESENTATIVE QUOTIENT GRAPH:
     ``star`` is a min-labeled cluster map (``src`` member → ``dst`` =
     component minimum, roots implicit), ``pairs`` is a batch of new edges
     (``id_a``, ``id_b``), ``nodes`` the universe to label (one column,
@@ -554,7 +556,10 @@ def connected_components_star(
     downward, and the edge count never grows above the input after the
     first large-star. Convergence = small-star output equals its input
     (set equality via a two-sided exceptAll probe on checkpointed, hence
-    stable, inputs)."""
+    stable, inputs). That test compares whole edge sets, which no per-row
+    flag expresses, so this loop does not run through
+    ``caching.bsp_iterate``; like it, it raises ``RuntimeError`` when
+    ``max_iters`` rounds run out before the fixpoint."""
     raw = edges.select(
         F.col(src).cast("long").alias("u"), F.col(dst).cast("long").alias("v")
     )
@@ -609,6 +614,13 @@ def connected_components_star(
         e = nxt
         if changed == 0:
             break
+    else:
+        raise RuntimeError(
+            f"connected_components_star: edges still rewiring after "
+            f"max_iters={max_iters} rounds — the edge set is not a forest "
+            "of stars yet, so its labels are not component minima. Raise "
+            "max_iters."
+        )
 
     # fixpoint: e is a forest of stars (child → component-min root)
     labels = nodes.join(e, nodes["id"] == e["u"], "left").select(

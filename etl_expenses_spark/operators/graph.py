@@ -34,18 +34,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
-from etl_expenses_spark.caching import (
-    bsp_checkpoint,
-    bsp_checkpoint_flagged,
-    bsp_checkpoint_sized,
-)
-
-# Diagnostics for the scale study (tools/graph_scaling_verdict.py): the
-# iterative operators record how many BSP/peel rounds their last run took,
-# so superlinear ×10 ratios can be decomposed into rounds-growth (inherent
-# to the graph) vs per-round-cost growth (a plan problem). Telemetry only —
-# never read by operator logic.
-LAST_STATS: dict[str, int] = {}
+from etl_expenses_spark.caching import bsp_checkpoint, bsp_iterate
 
 # Knuth multiplicative hash constants, int64-safe given the pre-modulus.
 _H_MOD = 1000003
@@ -139,7 +128,7 @@ def jaccard_link_prediction(
     du = deg.select(F.col("nbr").alias("u"), F.col("d").alias("du"))
     dv = deg.select(F.col("nbr").alias("v"), F.col("d").alias("dv"))
     # No broadcast hint: the degree relation is O(nodes), so pinning a
-    # broadcast risks driver OOM at the 100 TB tier (r5 ADVICE). AQE
+    # broadcast risks driver OOM at the 100 TB tier. AQE
     # converts these to broadcast joins at runtime whenever the measured
     # size fits autoBroadcastJoinThreshold; otherwise they are the plain
     # hash joins the docstring promises.
@@ -180,20 +169,19 @@ def kcore_decomposition(
     join neighbor estimates onto the symmetric adjacency, groupBy node,
     h-index of the collected neighbor values as a JVM array expression
     (sort desc, count positions where a[i] ≥ i+1 — prefix-monotone, so a
-    plain size(filter(...))). Labels are checkpointed per round via
-    caching.bsp_checkpoint (stats-safe localCheckpoint — plain
-    localCheckpoint inherits origin stats that double in bit length every
-    round and kill planning around round 25) so
-    the plan stays one round deep (the CC loop's discipline); the changed
-    flag is materialized with the labels so the convergence probe is a
-    metadata count, not a re-join.
+    plain size(filter(...))). The rounds run through
+    ``caching.bsp_iterate``: each round's estimates and changed flag are
+    materialized by one checkpoint job that also counts the changed rows,
+    and the next round reads a stats-reset leaf (plain localCheckpoint
+    inherits origin stats that double in bit length every round and kill
+    planning around round 25), so the plan stays one round deep.
 
     100 TB shape: per-round cost ≡ one hash join + one hash aggregate on
     the edge relation — identical to one BSP round of CC/PageRank; rounds
     needed ≈ graph's "coreness diameter", observed single digits on real
     co-occurrence graphs. Per-node state during the aggregate is O(deg),
-    which is catastrophic on hubs: `max_degree` is the scale tier (VERDICT
-    r6 #5, same playbook as link-prediction's capped tier) — each node's
+    which is catastrophic on hubs: `max_degree` is the scale tier (same
+    playbook as link-prediction's capped tier) — each node's
     neighbor list is hash-sampled down to `max_degree` entries
     (capped_adjacency's deterministic engine-portable Knuth-hash pick) and
     the graph is then MUTUAL-capped (an edge survives only if BOTH
@@ -204,12 +192,11 @@ def kcore_decomposition(
     EQUAL them whenever max_degree ≥ the graph's max degree (the capped
     lists are then the full lists; pinned in tests/test_graph_links.py).
 
-    Convergence contract (r6 ADVICE): the h-index iteration converges to
-    the exact core numbers only when it reaches a fixed point; exhausting
+    Convergence contract: the h-index iteration converges to the exact
+    core numbers only when it reaches a fixed point; exhausting
     `max_rounds` while estimates are still changing would silently return
-    OVER-estimates. This raises instead — mirroring the CC loop's
-    convergence discipline — so callers either see exact output or an
-    explicit instruction to raise max_rounds.
+    OVER-estimates. bsp_iterate raises instead, so callers either see exact
+    output or an explicit instruction to raise max_rounds.
     """
     hindex = (
         "size(filter(transform(sort_array(cs, false), (x, i) -> "
@@ -232,13 +219,12 @@ def kcore_decomposition(
             .distinct()
         )
     else:
-        # Canonicalize BEFORE capping (ADVICE r7): an input listing both
+        # Canonicalize BEFORE capping: an input listing both
         # (a,b) and (b,a) would otherwise survive capped_adjacency's
         # unionAll as duplicate (node,nbr) rows — duplicates eat cap slots
         # AND double-count neighbors in the h-index collect_list, turning
         # the documented lower bound into an over-estimate. least/greatest
-        # + distinct collapses both directions in the same single shuffle
-        # the old plain distinct spent.
+        # + distinct collapses both directions in one shuffle.
         canon = directed.select(
             F.least("pa", "pb").alias("pa"), F.greatest("pa", "pb").alias("pb")
         ).distinct()
@@ -264,9 +250,9 @@ def kcore_decomposition(
     # keeps the per-round join from planning around sym's copied stats.
     # Cost: one Row-conversion pass per round's sym scan, ~+0.8 s at
     # sf0.1 — the right trade for the tier this loop is built for.
-    # r14: leaf SIZING (bsp_checkpoint_sized) was A/B-measured here and on
-    # ktruss — kcore a wash (4.3-4.75 old vs 4.52 new medians), ktruss a
-    # consistent ~0.3 s LOSS: these loops' per-round work (H-step
+    # Leaf SIZING (sized / size_leaf) was A/B-measured here and on ktruss —
+    # kcore a wash (4.3-4.75 s full-width vs 4.52 s sized medians), ktruss
+    # a consistent ~0.3 s LOSS: these loops' per-round work (H-step
     # collect_list / wedge expansion) is real compute that a narrowed leaf
     # serializes. Full-width checkpoints stay; sizing is reserved for
     # trivial-per-row loops (connected_components).
@@ -295,72 +281,46 @@ def kcore_decomposition(
     # collect_list costs more than the saved round-trips (measured 62 s →
     # 108 s at the ×10 tier); under the cap that recomputation is bounded
     # and the double step wins the overhead-dominated tiers.
-    for _round in range(max_rounds):
-        if max_degree is None:
-            # single H-step, single pass: h and changed computed in ONE
-            # select off one est join — no extra node-sized joins (they
-            # cost a measurable per-round stage at overhead-bound tiers)
-            nbrv = sym.join(
-                est.select(F.col("node").alias("nbr"), F.col("c").alias("c_nbr")),
-                "nbr",
-            )
-            new, n_changed = bsp_checkpoint_flagged(
-                nbrv.groupBy("node")
-                .agg(F.collect_list("c_nbr").alias("cs"))
-                .select("node", F.expr(hindex).cast("long").alias("h"))
-                .join(est, "node")
-                .select(
-                    "node",
-                    F.least("h", "c").alias("c_new"),
-                    (F.least("h", "c") != F.col("c")).alias("changed"),
-                )
-                .select(F.col("node"), F.col("c_new").alias("c"), "changed"),
-                "changed",
-                size_leaf=False,
-            )
-        else:
-            # two H-steps per materialization round: halves the driver
-            # round-trips on the long fixed-cost convergence tail; safe to
-            # recompute the un-checkpointed inner step because the cap
-            # bounds every collect_list
-            def one(cur):
-                nbrv = sym.join(
-                    cur.select(
-                        F.col("node").alias("nbr"), F.col("c").alias("c_nbr")
-                    ),
-                    "nbr",
-                )
-                return (
-                    nbrv.groupBy("node")
-                    .agg(F.collect_list("c_nbr").alias("cs"))
-                    .select("node", F.expr(hindex).cast("long").alias("h"))
-                    .join(cur, "node")
-                    .select("node", F.least("h", "c").alias("c"))
-                )
-
-            stepped = est
-            for _ in range(_CAPPED_H_STEPS):
-                stepped = one(stepped)
-            new, n_changed = bsp_checkpoint_flagged(
-                stepped
-                .join(est.select("node", F.col("c").alias("c_prev")), "node")
-                .select(
-                    "node", "c", (F.col("c") != F.col("c_prev")).alias("changed")
-                ),
-                "changed",
-                size_leaf=False,
-            )
-        est = new.drop("changed")
-        if n_changed == 0:
-            LAST_STATS["kcore_rounds"] = _round + 1
-            break
-    else:
-        raise RuntimeError(
-            f"kcore_decomposition: estimates still changing after "
-            f"{max_rounds} rounds — the output would be an over-estimate, "
-            "not core numbers. Raise max_rounds (rounds needed grow with "
-            "the graph's coreness diameter)."
+    def h_step(cur: DataFrame) -> DataFrame:
+        # one H-step: h and changed computed in ONE select off one cur join
+        # — no extra node-sized joins (they cost a measurable per-round
+        # stage at overhead-bound tiers)
+        nbrv = sym.join(
+            cur.select(F.col("node").alias("nbr"), F.col("c").alias("c_nbr")),
+            "nbr",
         )
+        return (
+            nbrv.groupBy("node")
+            .agg(F.collect_list("c_nbr").alias("cs"))
+            .select("node", F.expr(hindex).cast("long").alias("h"))
+            .join(cur, "node")
+            .select(
+                "node",
+                F.least("h", "c").alias("c"),
+                (F.least("h", "c") != F.col("c")).alias("changed"),
+            )
+        )
+
+    def step(est: DataFrame, _round: int) -> DataFrame:
+        est = est.drop("changed")
+        if max_degree is None:
+            return h_step(est)
+        stepped = est
+        for _ in range(_CAPPED_H_STEPS):
+            stepped = h_step(stepped)
+        return stepped.join(
+            est.select("node", F.col("c").alias("c_prev")), "node"
+        ).select("node", "c", (F.col("c") != F.col("c_prev")).alias("changed"))
+
+    est = bsp_iterate(
+        est,
+        step,
+        max_rounds=max_rounds,
+        exhausted=f"kcore_decomposition: estimates still changing after "
+        f"{max_rounds} rounds — the output would be an over-estimate, "
+        "not core numbers. Raise max_rounds (rounds needed grow with "
+        "the graph's coreness diameter).",
+    )
     return est.select("node", F.col("c").alias("core"))
 
 
@@ -380,8 +340,9 @@ def lpa_communities(
     two-cycles on bipartite-ish structures — and, with the deterministic
     tie-break, it makes the whole evolution (and so the output)
     reproducible across runs, partitionings, and engines. Runs until a
-    full even+odd cycle changes nothing or `max_cycles` cycles elapse;
-    LPA is fixed-budget by nature (labels are schedule-dependent in any
+    full even+odd cycle changes nothing or `max_cycles` cycles elapse,
+    and then returns the current labels without raising: LPA is
+    fixed-budget by nature (labels are schedule-dependent in any
     implementation), so a budget cap is the honest contract — unlike
     k-core there is no exact answer being approximated.
 
@@ -406,8 +367,8 @@ def lpa_communities(
             .distinct()
         )
     else:
-        # same both-directions canonicalization as kcore's capped path
-        # (ADVICE r7): duplicates would double LPA votes
+        # same both-directions canonicalization as kcore's capped path:
+        # duplicates would double LPA votes
         canon = directed.select(
             F.least("pa", "pb").alias("pa"), F.greatest("pa", "pb").alias("pb")
         ).distinct()
@@ -422,12 +383,15 @@ def lpa_communities(
     # Cost: one Row-conversion pass per round's sym scan, ~+0.8 s at
     # sf0.1 — the right trade for the tier this loop is built for.
     sym = bsp_checkpoint(sym)
+    # "moved" is the previous half's raw change; the initial true keeps the
+    # first half from ending the loop
     labels = (
-        sym.select("node").distinct().select("node", F.col("node").alias("lab"))
+        sym.select("node")
+        .distinct()
+        .select("node", F.col("node").alias("lab"), F.lit(True).alias("moved"))
     ).transform(bsp_checkpoint)
-    stable_halves = 0
-    for half in range(2 * max_cycles):
-        parity = half % 2
+
+    def half_sweep(labels: DataFrame, half: int) -> DataFrame:
         nbrlab = sym.join(
             labels.select(F.col("node").alias("nbr"), F.col("lab").alias("nlab")),
             "nbr",
@@ -441,33 +405,27 @@ def lpa_communities(
             .filter(F.col("_rk") == 1)
             .select("node", F.col("nlab").alias("best"))
         )
-        new = (
-            labels.join(best, "node", "left")
-            .select(
-                "node",
-                F.when(
-                    # pmod, not %: Spark's % keeps the dividend's sign, so a
-                    # negative odd id yields -1 and would never match parity
-                    # 1 — frozen at its initial label forever (ADVICE r7)
-                    (F.pmod(F.col("node"), F.lit(2)) == parity)
-                    & F.col("best").isNotNull(),
-                    F.col("best"),
-                )
-                .otherwise(F.col("lab"))
-                .alias("lab_new"),
-                F.col("lab").alias("lab_old"),
-            )
-            .select(
-                "node",
-                F.col("lab_new").alias("lab"),
-                (F.col("lab_new") != F.col("lab_old")).alias("changed"),
-            )
+        lab_new = F.when(
+            # pmod, not %: Spark's % keeps the dividend's sign, so a
+            # negative odd id yields -1 and would never match parity 1 —
+            # frozen at its initial label forever
+            (F.pmod(F.col("node"), F.lit(2)) == half % 2)
+            & F.col("best").isNotNull(),
+            F.col("best"),
+        ).otherwise(F.col("lab"))
+        moved = lab_new != F.col("lab")
+        # changed = moved this half OR last half: no changed row means one
+        # full even+odd cycle without movement
+        return labels.join(best, "node", "left").select(
+            "node",
+            lab_new.alias("lab"),
+            moved.alias("moved"),
+            (moved | F.col("moved")).alias("changed"),
         )
-        new, n_changed = bsp_checkpoint_flagged(new, "changed", size_leaf=False)
-        labels = new.drop("changed")
-        stable_halves = stable_halves + 1 if n_changed == 0 else 0
-        if stable_halves >= 2:  # one full even+odd cycle without movement
-            break
+
+    labels = bsp_iterate(
+        labels, half_sweep, max_rounds=2 * max_cycles, exhausted=None
+    )
     return labels.select("node", F.col("lab").alias("community"))
 
 
@@ -497,16 +455,17 @@ def ktruss_edges(
        fixpoint IS the k-truss: peeling order never changes the result).
 
     Rounds are data-dependent (≤ edges in the worst chain); state is the
-    edge relation itself, re-checkpointed per round via bsp_checkpoint —
-    the stats-safe form, since e_{t+1} derives from e_t through joins
-    (plain localCheckpoint's copied stats would compound). Convergence
-    raises on budget exhaustion rather than returning a superset.
+    edge relation itself, run through ``caching.bsp_iterate``, which
+    re-checkpoints it per round behind a stats-reset leaf, since e_{t+1}
+    derives from e_t through joins (plain localCheckpoint's copied stats
+    would compound). Convergence raises on budget exhaustion rather than
+    returning a superset.
 
     `edges` must be deduplicated undirected (pa < pb) long pairs —
     _copurchase_edges' contract. Exactness vs literal sequential peeling
     is pinned in tests/test_graph_links.py.
 
-    UNCAPPED DEGREE BOUND (ADVICE r8): the wedge expansion flattens all
+    UNCAPPED DEGREE BOUND: the wedge expansion flattens all
     C(deg, 2) higher-neighbor pairs of a node into ONE array value before
     exploding, so a hub of degree d materializes a ~d²/2-element array in a
     single row — a 100k-degree hub is ~5·10⁹ structs, an executor OOM, not
@@ -558,9 +517,13 @@ def ktruss_edges(
                 "higher-neighbor pairs land in ONE array row. Pass "
                 "max_degree=<cap> for the mutual-capped lower-bound tier."
             )
-    e = canon.localCheckpoint()  # input leaf: checkpointed once
+    # input leaf, checkpointed once; the state's "changed" flag marks the
+    # edges a round peels, which the next round filters out
+    e = canon.select("lo", "hi", F.lit(False).alias("changed")).localCheckpoint()
     min_support = k - 2
-    for _round in range(max_rounds):
+
+    def peel(e: DataFrame, _round: int) -> DataFrame:
+        e = e.filter(~F.col("changed")).select("lo", "hi")
         # oriented adjacency: per-lo sorted arrays of higher neighbors
         nbrs = e.groupBy("lo").agg(F.sort_array(F.collect_set("hi")).alias("ns"))
         wedges = nbrs.select(
@@ -586,32 +549,23 @@ def ktruss_edges(
             .groupBy("lo", "hi")
             .agg(F.count(F.lit(1)).alias("sup"))
         )
-        # r13: the drop flag rides the peeled relation and is counted as an
-        # observed metric inside the checkpoint job (bsp_checkpoint_flagged)
-        # — the old probe re-joined e against survivors per round, an extra
-        # edge-scale left_anti action every peel. Dropped edges are
-        # materialized alongside survivors for one round (few rows — the
-        # peel's delta) and filtered lazily off the checkpointed leaf.
-        flagged, n_dropped = bsp_checkpoint_flagged(
-            e.join(support, ["lo", "hi"], "left").select(
-                "lo",
-                "hi",
-                (F.coalesce(F.col("sup"), F.lit(0)) < min_support).alias(
-                    "dropped"
-                ),
-            ),
-            "dropped",
-            size_leaf=False,
+        # peeled edges are materialized alongside survivors for one round
+        # (few rows — the peel's delta) and filtered lazily off the leaf
+        return e.join(support, ["lo", "hi"], "left").select(
+            "lo",
+            "hi",
+            (F.coalesce(F.col("sup"), F.lit(0)) < min_support).alias("changed"),
         )
-        e = flagged.filter(~F.col("dropped")).select("lo", "hi")
-        if n_dropped == 0:
-            LAST_STATS["ktruss_rounds"] = _round + 1
-            return e.select(F.col("lo").alias("pa"), F.col("hi").alias("pb"))
-    raise RuntimeError(
-        f"ktruss_edges: still peeling after {max_rounds} rounds — the "
-        "current edge set is a SUPERSET of the k-truss, not the k-truss. "
-        "Raise max_rounds."
+
+    e = bsp_iterate(
+        e,
+        peel,
+        max_rounds=max_rounds,
+        exhausted=f"ktruss_edges: still peeling after {max_rounds} rounds — "
+        "the current edge set is a SUPERSET of the k-truss, not the k-truss. "
+        "Raise max_rounds.",
     )
+    return e.select(F.col("lo").alias("pa"), F.col("hi").alias("pb"))
 
 
 def adamic_adar_link_prediction(
@@ -647,7 +601,7 @@ def adamic_adar_link_prediction(
     # count would disagree with the wedge-generating degree (and an inner
     # join on it could silently drop wedges whose center never appears on
     # the nbr side). Deriving d from ns keeps capped and uncapped calls
-    # consistent and removes the degree join entirely (ADVICE r10).
+    # consistent and removes the degree join entirely.
     wedges = nbrs.select(
         F.col("node").alias("w"),
         F.size("ns").alias("d"),

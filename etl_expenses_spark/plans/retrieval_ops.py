@@ -385,7 +385,7 @@ def pagerank_copurchase(spark, sf_dir):
     edges = e0.select(F.col("pa").alias("s"), F.col("pb").alias("d")).unionAll(
         e0.select(F.col("pb").alias("s"), F.col("pa").alias("d"))
     )
-    from etl_expenses_spark.caching import bsp_checkpoint_sized
+    from etl_expenses_spark.caching import bsp_checkpoint
 
     # r14 (guide §2 scale-adaptive partitioning): the co-purchase edge
     # relation is NODE-community sized (7.1k rows at sf0.1), yet it was
@@ -398,11 +398,12 @@ def pagerank_copurchase(spark, sf_dir):
     # graph scale, where the keyed repartition below still gives each
     # round's join a reusable layout.
     n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    edges = bsp_checkpoint_sized(edges.repartition(n_shuffle, "s"))
-    deg = bsp_checkpoint_sized(
+    edges = bsp_checkpoint(edges.repartition(n_shuffle, "s"), sized=True)
+    deg = bsp_checkpoint(
         edges.groupBy("s")
         .agg(F.count(F.lit(1)).alias("deg"))
-        .withColumnRenamed("s", "node")
+        .withColumnRenamed("s", "node"),
+        sized=True,
     )
     r = deg.select("node", "deg", F.lit(1000000).cast("long").alias("r"))
     for _ in range(3):

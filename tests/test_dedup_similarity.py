@@ -117,6 +117,26 @@ def test_connected_components_chain_and_islands(spark):
     }
 
 
+def test_connected_components_raise_when_rounds_run_out(spark):
+    """A 41-node chain needs 41 min-label rounds: the default budget of 20
+    must raise instead of returning unconverged labels, a budget of 45
+    gives one cluster, and the star variant raises on a 2-round budget."""
+    import pytest
+
+    from etl_expenses_spark.operators.dedup import (
+        connected_components,
+        connected_components_star,
+    )
+
+    edges = spark.createDataFrame([(i, i + 1) for i in range(40)], ["src", "dst"])
+    with pytest.raises(RuntimeError, match="max_iters=20"):
+        connected_components(edges).collect()
+    got = {r.cluster_id for r in connected_components(edges, max_iters=45).collect()}
+    assert got == {0}
+    with pytest.raises(RuntimeError, match="max_iters=2"):
+        connected_components_star(edges, max_iters=2).collect()
+
+
 def test_star_cc_equals_bsp_cc_on_random_graphs(spark):
     """Property: large-star/small-star and BSP min-label propagation
     compute identical components on random graphs — including the

@@ -296,6 +296,22 @@ def test_lpa_bipartite_does_not_oscillate(spark):
     assert got == got2 and len(got) == 6
 
 
+def test_lpa_returns_when_cycle_budget_runs_out(spark):
+    """LPA's budget is its contract: labels still moving when max_cycles
+    runs out are returned, not raised."""
+    from etl_expenses_spark import caching
+    from etl_expenses_spark.operators.graph import lpa_communities
+
+    edges = [(i, i + 1) for i in range(12)]
+    df = spark.createDataFrame(edges, "pa long, pb long")
+    capped = {r.node: r.community for r in lpa_communities(df, max_cycles=1).collect()}
+    assert caching.BSP_RUNS[-1]["rounds"] == 2
+    # the labels were still moving: a larger budget ends elsewhere
+    full = {r.node: r.community for r in lpa_communities(df).collect()}
+    assert set(capped) == set(full) == set(range(13))
+    assert capped != full
+
+
 def test_kcore_capped_dedups_both_direction_input(spark):
     """ADVICE r7: an edge list carrying BOTH (a,b) and (b,a) must produce
     the same capped core numbers as its canonical pa<pb form — duplicate

@@ -8,7 +8,7 @@ For sf0.1 and the ×10 synth tier, measures:
   work metric of every wedge-expanding operator — both uncapped and after
   the mutual cap (64, the tier the capped queries run);
 - kcore_copurchase_capped / ktruss_copurchase_capped: wall time AND the
-  operator-reported round count (operators.graph.LAST_STATS), giving
+  BSP round count the operator's loop reported (caching.BSP_RUNS), giving
   per-round wall;
 - triangle_count_copurchase / link_prediction_jaccard_capped: wall time
   (non-iterative — the wedge ratio is their whole story).
@@ -28,8 +28,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from etl_expenses_spark import caching  # noqa: E402
 from etl_expenses_spark.caching import clear_tracked_caches  # noqa: E402
-from etl_expenses_spark.operators import graph as G  # noqa: E402
 from etl_expenses_spark.operators.graph import capped_adjacency  # noqa: E402
 from etl_expenses_spark.plans import REGISTRY  # noqa: E402
 from etl_expenses_spark.plans.sketch_ops import (  # noqa: E402
@@ -96,9 +96,9 @@ def main() -> None:
             continue
         r: dict = {"stats": graph_stats(spark, sf_dir)}
         r["kcore_capped_s"] = timed(spark, "kcore_copurchase_capped", sf_dir)
-        r["kcore_rounds"] = G.LAST_STATS.get("kcore_rounds")
+        r["kcore_rounds"] = caching.BSP_RUNS[-1]["rounds"]
         r["ktruss_capped_s"] = timed(spark, "ktruss_copurchase_capped", sf_dir)
-        r["ktruss_rounds"] = G.LAST_STATS.get("ktruss_rounds")
+        r["ktruss_rounds"] = caching.BSP_RUNS[-1]["rounds"]
         r["triangle_s"] = timed(spark, "triangle_count_copurchase", sf_dir)
         r["linkpred_capped_s"] = timed(
             spark, "link_prediction_jaccard_capped", sf_dir
