@@ -40,6 +40,23 @@ def upsert(updates: DataFrame, target: DataFrame, keys: Sequence[str]) -> DataFr
     return updates.unionByName(keep)
 
 
+def read_gold(spark, target_path: str, **options) -> DataFrame | None:
+    """The parquet table at ``target_path``, or None when there is none yet.
+
+    Only a MISSING or EMPTY target means "first load": PATH_NOT_FOUND for
+    an absent dir, UNABLE_TO_INFER_SCHEMA for a dir with no parquet files
+    yet. Any other failure (corrupt footer, a non-parquet file, schema
+    problem, permissions surfaced as analysis) propagates — treating it as
+    a first load would append the full batch and silently break the
+    exactly-once J1-J4 contract."""
+    try:
+        return spark.read.options(**options).parquet(target_path)
+    except AnalysisException as e:
+        if e.getCondition() in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
+            return None
+        raise
+
+
 def merge_append(
     batch: DataFrame,
     target_path: str,
@@ -50,27 +67,13 @@ def merge_append(
     ``target_path``. Returns the number of rows appended. Loading the same
     batch twice is a no-op (the idempotency property test in
     tests/test_merge.py — the J1-J4 contract)."""
-    spark = batch.sparkSession
-    try:
-        target = spark.read.parquet(target_path)
-    except AnalysisException as e:
-        # Only a MISSING/EMPTY target means "first load": PATH_NOT_FOUND for
-        # an absent dir, UNABLE_TO_INFER_SCHEMA for a dir with no parquet
-        # files yet. Any other analysis error (corrupt footer, schema
-        # problem, permissions surfaced as analysis) must propagate —
-        # swallowing it would append the full batch and silently break the
-        # exactly-once J1-J4 contract.
-        msg = str(e)
-        if (
-            "PATH_NOT_FOUND" in msg
-            or "Path does not exist" in msg
-            or "UNABLE_TO_INFER_SCHEMA" in msg
-        ):
-            fresh = batch
-        else:
-            raise
-    else:
-        fresh = new_rows(batch, target, keys)
+    target = read_gold(batch.sparkSession, target_path)
+    fresh = batch if target is None else new_rows(batch, target, keys)
+    return _append(fresh, target_path, partition_by)
+
+
+def _append(fresh: DataFrame, target_path: str,
+            partition_by: Sequence[str] | None) -> int:
     fresh = fresh.cache()
     n = fresh.count()
     if n > 0:
@@ -163,31 +166,10 @@ def merge_append_evolve(
     failing or forking the table. Readers of an evolved gold table must
     pass ``mergeSchema=true`` (older footers lack the new columns);
     ``read_evolved`` below does."""
-    spark = batch.sparkSession
-    try:
-        target = spark.read.option("mergeSchema", "true").parquet(target_path)
-    except AnalysisException as e:
-        msg = str(e)
-        if (
-            "PATH_NOT_FOUND" in msg
-            or "Path does not exist" in msg
-            or "UNABLE_TO_INFER_SCHEMA" in msg
-        ):
-            target = None
-        else:
-            raise
+    target = read_gold(batch.sparkSession, target_path, mergeSchema="true")
     if target is not None:
-        batch = evolve_schema(batch, target)
-    fresh = batch if target is None else new_rows(batch, target, keys)
-    fresh = fresh.cache()
-    n = fresh.count()
-    if n > 0:
-        writer = fresh.write.mode("append")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(target_path)
-    fresh.unpersist()
-    return n
+        batch = new_rows(evolve_schema(batch, target), target, keys)
+    return _append(batch, target_path, partition_by)
 
 
 def read_evolved(spark, target_path: str) -> DataFrame:

@@ -13,50 +13,24 @@ state is the AGGREGATE, not the facts); a 100 TB-keyed view would swap the
 rewrite for a partition-scoped MERGE keyed on the delta's touched keys,
 with the identical fold algebra.
 
-State layout + commit protocol are the MG sink's (streaming/
-heavyhitters.py): epoch-versioned ``view-{epoch}.parquet`` → atomic
-``_meta.json`` replace → stale-state GC. Replay of the one committed
-epoch is skipped; ``epoch_id < last_epoch`` means a lost/reset checkpoint
-and fails fast instead of silently dropping data.
+State: ``state-{epoch}.parquet`` holds the view. Commit protocol, replay
+skip and reset-checkpoint fail-fast are the versioned-state ledger of
+streaming/state.py; ``init_view_state`` commits the base view as epoch
+−1, so the first micro-batch (epoch 0) folds on top of it.
 """
 
 from __future__ import annotations
 
-import json
 import os
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 
-
-def _read_meta(state_dir: str) -> dict:
-    meta_path = os.path.join(state_dir, "_meta.json")
-    if os.path.exists(meta_path):
-        with open(meta_path) as f:
-            return json.load(f)
-    return {"last_epoch": -1, "view": None}
-
-
-def _commit(spark: SparkSession, state_dir: str, view: DataFrame,
-            epoch_id: int) -> None:
-    """Epoch-versioned write → atomic meta swap → GC (crash-safe: a crash
-    between steps leaves the meta at a complete prior view)."""
-    name = f"view-{int(epoch_id)}.parquet"
-    view.write.mode("overwrite").parquet(os.path.join(state_dir, name))
-    fd, tmp = tempfile.mkstemp(dir=state_dir, prefix="._meta")
-    with os.fdopen(fd, "w") as f:
-        json.dump({"last_epoch": int(epoch_id), "view": name}, f)
-    os.replace(tmp, os.path.join(state_dir, "_meta.json"))
-    for n in os.listdir(state_dir):
-        if n != name and n.startswith("view-"):
-            shutil.rmtree(os.path.join(state_dir, n), ignore_errors=True)
-        elif n.startswith("._meta"):
-            # sweep temp meta files leaked by a crash pre-os.replace
-            try:
-                os.unlink(os.path.join(state_dir, n))
-            except OSError:
-                pass
+from etl_expenses_spark.streaming.state import (
+    commit_state,
+    ledger_sink,
+    read_state,
+    start_available_now,
+)
 
 
 def init_view_state(view: DataFrame, state_dir: str) -> None:
@@ -66,19 +40,16 @@ def init_view_state(view: DataFrame, state_dir: str) -> None:
     from pyspark.sql import functions as F
 
     os.makedirs(state_dir, exist_ok=True)
-    _commit(
-        view.sparkSession,
+    commit_state(
         state_dir,
         view.withColumn("total", F.col("total").cast("decimal(38,2)")),
         -1,
+        0,
     )
 
 
 def read_view(spark: SparkSession, state_dir: str) -> DataFrame:
-    meta = _read_meta(state_dir)
-    if meta["view"] is None:
-        raise RuntimeError(f"ivm_state_sink: no committed view at {state_dir}")
-    return spark.read.parquet(os.path.join(state_dir, meta["view"]))
+    return read_state(spark, state_dir, "ivm_state_sink")[0]
 
 
 def ivm_state_sink(
@@ -101,28 +72,15 @@ def ivm_state_sink(
         zset_from_cdc,
     )
 
-    def fold(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
-        meta = _read_meta(state_dir)
-        if epoch_id == meta["last_epoch"]:
-            return  # replay of the one batch whose commit completed
-        if epoch_id < meta["last_epoch"]:
-            raise RuntimeError(
-                f"ivm_state_sink: epoch {int(epoch_id)} < committed "
-                f"last_epoch {meta['last_epoch']} at {state_dir} — the "
-                "stream's checkpoint was lost or reset; silently skipping "
-                "would drop CDC batches with no error. Restore the "
-                "checkpoint or re-seed the state_dir."
-            )
+    def fold(batch_df: DataFrame, prev: DataFrame | None):
+        if prev is None:
+            raise RuntimeError(f"ivm_state_sink: no committed state at {state_dir}")
         deltas = zset_from_cdc(batch_df, key_old, amt_old, key_new, amt_new)
-        new_view = maintain_grouped_totals(
-            read_view(spark, state_dir), deltas, key=key
-        ).withColumn("total", F.col("total").cast("decimal(38,2)"))
-        _commit(spark, state_dir, new_view, epoch_id)
+        new_view = maintain_grouped_totals(prev, deltas, key=key).withColumn(
+            "total", F.col("total").cast("decimal(38,2)")
+        )
+        return new_view, 0
 
-    return (
-        cdc_stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return start_available_now(
+        cdc_stream, ledger_sink(state_dir, "ivm_state_sink", fold), checkpoint_dir
     )

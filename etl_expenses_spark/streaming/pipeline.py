@@ -9,7 +9,8 @@ cron batches, MAX(date) watermarks, and per-batch anti-join dedup — maps to:
   (J1-J4 made incremental: the state store replaces the DISTINCT-key fetch),
 - tumbling/sliding/session window aggregations,
 - ``foreachBatch`` → merge_append for the idempotent gold load,
-- ``trigger(availableNow=True)`` for batch-parity runs (the cron analog).
+- availableNow triggers for batch-parity runs (the cron analog), started
+  through streaming/state.py ``start_available_now``.
 
 Checkpointing replaces the reference's compensation lambda: a failed batch
 replays from the checkpoint instead of running rollback UPDATEs
@@ -18,10 +19,21 @@ replays from the checkpoint instead of running rollback UPDATEs
 
 from __future__ import annotations
 
-from pyspark.errors import AnalysisException
+import json
+import os
+import shutil
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from etl_expenses_spark.streaming.state import (
+    compact_set_union,
+    compaction_target,
+    epoch_dirs,
+    epoch_log_sink,
+    start_available_now,
+)
 
 EVENT_SCHEMA = T.StructType(
     [
@@ -202,13 +214,7 @@ def run_events_stream_once(
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
         merge_append(batch_df, gold_path, keys=["event_id"])
 
-    (
-        events.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    start_available_now(events, sink, checkpoint_dir).awaitTermination()
 
 
 def run_media_stream_featurize(
@@ -242,13 +248,7 @@ def run_media_stream_featurize(
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
         merge_append(batch_df, gold_path, keys=["media_id"])
 
-    (
-        feats.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    start_available_now(feats, sink, checkpoint_dir).awaitTermination()
 
 
 def run_media_stream_probe(
@@ -279,13 +279,7 @@ def run_media_stream_probe(
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
         merge_append(batch_df, gold_path, keys=["media_id"])
 
-    (
-        probes.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    start_available_now(probes, sink, checkpoint_dir).awaitTermination()
 
 
 def run_events_stream_to_wap(
@@ -319,13 +313,7 @@ def run_events_stream_to_wap(
             return
         publish_append(spark, batch_df, table_root, audits=audits or [])
 
-    (
-        events.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    start_available_now(events, sink, checkpoint_dir).awaitTermination()
 
 
 def stream_dedup_within_watermark(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
@@ -358,7 +346,7 @@ def run_events_stream_upsert(
     Restart semantics: an epoch replayed after a crash recomputes the same
     per-user latest rows, and upsert converges to the same table —
     idempotent by construction, no dedup state needed."""
-    from etl_expenses_spark.operators.merge import upsert
+    from etl_expenses_spark.operators.merge import read_gold, upsert
     from pyspark.sql.window import Window
 
     events = read_event_stream(spark, bronze_dir)
@@ -375,19 +363,8 @@ def run_events_stream_upsert(
             .select("user_id", "ts", "event_type", "value")
         )
         spark_ = batch_df.sparkSession
-        try:
-            target = spark_.read.parquet(gold_path)
-        except AnalysisException as e:
-            # same contract as merge_append: only a missing/empty target
-            # means "first load"; real errors must fail the epoch so the
-            # checkpoint replays it instead of silently dropping state
-            msg = str(e)
-            if not (
-                "PATH_NOT_FOUND" in msg
-                or "Path does not exist" in msg
-                or "UNABLE_TO_INFER_SCHEMA" in msg
-            ):
-                raise
+        target = read_gold(spark_, gold_path)
+        if target is None:
             latest.write.mode("overwrite").parquet(gold_path)
             return
         merged = upsert(latest, target, keys=["user_id"])
@@ -397,13 +374,7 @@ def run_events_stream_upsert(
         merged.write.mode("overwrite").parquet(tmp)
         spark_.read.parquet(tmp).write.mode("overwrite").parquet(gold_path)
 
-    (
-        events.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    start_available_now(events, sink, checkpoint_dir).awaitTermination()
 
 
 def pit_enrich_sink(dim_path: str, gold_path: str):
@@ -415,12 +386,9 @@ def pit_enrich_sink(dim_path: str, gold_path: str):
     leave the gold table unchanged, which the epoch-keyed
     ``mode("overwrite")`` write guarantees."""
 
-    def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark_ = batch_df.sparkSession
-        dim = spark_.read.parquet(dim_path)
-        enriched = (
+    def enrich(batch_df: DataFrame) -> DataFrame:
+        dim = batch_df.sparkSession.read.parquet(dim_path)
+        return (
             batch_df.join(F.broadcast(dim), "user_id")
             .filter(
                 (F.col("ts") >= F.col("valid_from"))
@@ -428,9 +396,8 @@ def pit_enrich_sink(dim_path: str, gold_path: str):
             )
             .select("event_id", "user_id", "ts", "event_type", "value", "tier")
         )
-        enriched.write.mode("overwrite").parquet(f"{gold_path}/epoch={epoch_id}")
 
-    return sink
+    return epoch_log_sink(gold_path, enrich)
 
 
 def run_events_stream_pit_enrich(
@@ -460,13 +427,9 @@ def run_events_stream_pit_enrich(
     ordinary discovered partition column; no cross-epoch rewrite, no
     read-the-target dedup join, O(epoch) work per batch at any scale."""
     events = read_event_stream(spark, bronze_dir)
-    (
-        events.writeStream.foreachBatch(pit_enrich_sink(dim_path, gold_path))
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    start_available_now(
+        events, pit_enrich_sink(dim_path, gold_path), checkpoint_dir
+    ).awaitTermination()
 
 
 def mv_state_sink(mv_path: str):
@@ -482,16 +445,13 @@ def mv_state_sink(mv_path: str):
     time via :func:`mv_read`; a periodic compaction folding old epochs
     into one is the same re-aggregation run offline."""
 
-    def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        state = batch_df.groupBy("user_id").agg(
+    def partial(batch_df: DataFrame) -> DataFrame:
+        return batch_df.groupBy("user_id").agg(
             F.count(F.lit(1)).alias("n_events"),
             F.sum(F.col("value").cast("decimal(18,2)")).alias("total_value"),
         )
-        state.write.mode("overwrite").parquet(f"{mv_path}/epoch={epoch_id}")
 
-    return sink
+    return epoch_log_sink(mv_path, partial)
 
 
 def mv_read(spark: SparkSession, mv_path: str) -> DataFrame:
@@ -516,13 +476,9 @@ def run_events_stream_incremental_mv(
     ever rescans history. ``mv_read(...)`` must equal the full batch
     aggregate over the same inputs (pinned in tests/test_streaming.py)."""
     events = read_event_stream(spark, bronze_dir)
-    (
-        events.writeStream.foreachBatch(mv_state_sink(mv_path))
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    start_available_now(
+        events, mv_state_sink(mv_path), checkpoint_dir
+    ).awaitTermination()
 
 
 def jdbc_epoch_sink(url: str, table: str, connect, driver: str | None = None,
@@ -611,11 +567,11 @@ def jdbc_epoch_sink(url: str, table: str, connect, driver: str | None = None,
         # rows (ordinals 1..k). Unlike a positional id, this key is
         # ORDER-insensitive: identical rows are interchangeable, so a
         # retried partition that recomputes the same multiset in a
-        # different row order still publishes the exact multiset (the r4
-        # ADVICE hazard: positional _rid + reordered recomputation +
-        # duplicated payload rows could publish a wrong multiset). The
-        # window shuffles only this micro-batch, partitioned by row
-        # content — no global or skewed partition at any batch size.
+        # different row order still publishes the exact multiset (a
+        # positional _rid + reordered recomputation + duplicated payload
+        # rows could publish a wrong multiset). The window shuffles only
+        # this micro-batch, partitioned by row content — no global or
+        # skewed partition at any batch size.
         from pyspark.sql.window import Window as _W
 
         dup_w = _W.partitionBy(
@@ -667,15 +623,11 @@ def run_events_stream_to_jdbc(
     reference's webhook→Redshift flow with the ledger replacing its
     per-batch DISTINCT-key existence probe."""
     events = read_event_stream(spark, bronze_dir)
-    (
-        events.writeStream.foreachBatch(
-            jdbc_epoch_sink(url, table, connect, driver, single_writer)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    start_available_now(
+        events,
+        jdbc_epoch_sink(url, table, connect, driver, single_writer),
+        checkpoint_dir,
+    ).awaitTermination()
 
 
 DOC_SCHEMA = T.StructType(
@@ -704,14 +656,10 @@ def index_state_sink(index_path: str):
     (token -> sorted doc_ids seen in this batch). Same replay-idempotency
     contract as mv_state_sink: an epoch directory is overwritten, never
     appended, so at-least-once replays converge."""
-    from pyspark.sql import functions as F
-
     from etl_expenses_spark.functions.text import tokens
 
-    def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        delta = (
+    def postings(batch_df: DataFrame) -> DataFrame:
+        return (
             batch_df.select(
                 "doc_id", F.explode(tokens(F.lower(F.col("text")))).alias("tok")
             )
@@ -719,9 +667,8 @@ def index_state_sink(index_path: str):
             .groupBy("tok")
             .agg(F.sort_array(F.collect_set("doc_id")).alias("postings"))
         )
-        delta.write.mode("overwrite").parquet(f"{index_path}/epoch={epoch_id}")
 
-    return sink
+    return epoch_log_sink(index_path, postings)
 
 
 def index_read(spark: SparkSession, index_path: str) -> DataFrame:
@@ -733,8 +680,6 @@ def index_read(spark: SparkSession, index_path: str) -> DataFrame:
     Equals the batch-built index over the same documents (pinned in
     tests/test_streaming.py — the stream==batch proof for index
     maintenance)."""
-    from pyspark.sql import functions as F
-
     return (
         spark.read.parquet(index_path)
         .select("tok", F.explode("postings").alias("doc_id"))
@@ -754,13 +699,9 @@ def run_docs_stream_index(
     (plans/retrieval_ops.py builds the same index as a batch query; this
     keeps it fresh under ingest without ever rescanning history)."""
     docs = read_document_stream(spark, bronze_dir)
-    (
-        docs.writeStream.foreachBatch(index_state_sink(index_path))
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    start_available_now(
+        docs, index_state_sink(index_path), checkpoint_dir
+    ).awaitTermination()
 
 
 def index_compact(spark: SparkSession, index_path: str) -> int:
@@ -768,46 +709,18 @@ def index_compact(spark: SparkSession, index_path: str) -> int:
     structured compaction pass that keeps merge-on-read cost flat as
     epochs accumulate. Returns the number of epochs folded.
 
-    Crash safety WITHOUT an atomic multi-directory swap: the index merge
-    is a SET UNION (postings dedupe, df = count distinct), so it is
-    idempotent under duplication — the compacted epoch is written first
-    and the old epoch directories are deleted after. A crash anywhere in
-    between leaves old + compacted epochs coexisting, which merge-on-read
-    absorbs (same final index), and a re-run of compaction converges.
-    This is exactly why compaction is scoped to set-semantics state;
-    additive state (mv_state_sink's counts/sums) would double-count and
-    needs the WAP manifest swap instead (operators/wap.py).
-
-    Target-epoch choice: the compacted epoch id is
-    ``min(existing_ids + [0]) - 1`` — always NEGATIVE and always fresh.
-    Streaming batch ids from a checkpoint are a monotone counter >= 0,
-    so a resumed stream can never claim (and mode("overwrite") away) the
-    compacted directory; writing max+1 instead would collide with the
-    very next micro-batch after resume. Strictly-below-min also means
-    the target dir never pre-exists, so the merge read never overwrites
-    one of its own inputs mid-scan. Each successive compaction steps one
-    lower (-1, -2, ...)."""
-    import glob as _glob
-    import shutil as _shutil
-
-    from pyspark.sql import functions as F
-
-    epoch_dirs = sorted(_glob.glob(f"{index_path}/epoch=*"))
-    if len(epoch_dirs) <= 1:
-        return 0
-    epoch_ids = [int(d.rsplit("epoch=", 1)[1]) for d in epoch_dirs]
-    target = min(epoch_ids + [0]) - 1
-    merged = (
-        spark.read.parquet(index_path)
-        .select("tok", F.explode("postings").alias("doc_id"))
+    The index merge is a SET UNION (postings dedupe, df = count
+    distinct), so it is idempotent under duplication and compacts through
+    streaming/state.py ``compact_set_union``: write-then-delete with no
+    atomic swap, to a fresh negative epoch id no resumed stream can claim.
+    Additive state (mv_state_sink's counts/sums) would double-count in the
+    crash window and needs a manifest swap instead (cms_compact)."""
+    return compact_set_union(spark, index_path, lambda log: (
+        log.select("tok", F.explode("postings").alias("doc_id"))
         .distinct()
         .groupBy("tok")
         .agg(F.sort_array(F.collect_set("doc_id")).alias("postings"))
-    )
-    merged.write.mode("overwrite").parquet(f"{index_path}/epoch={target}")
-    for d in epoch_dirs:
-        _shutil.rmtree(d)
-    return len(epoch_dirs)
+    ))
 
 
 def lsh_state_sink(
@@ -832,15 +745,9 @@ def lsh_state_sink(
     the stream==batch equality lsh_read_pairs pins."""
     from etl_expenses_spark.operators.dedup import minhash_band_signatures
 
-    def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        sig = minhash_band_signatures(
-            batch_df, num_perm=num_perm, bands=bands, shingle_k=shingle_k
-        )
-        sig.write.mode("overwrite").parquet(f"{index_path}/epoch={epoch_id}")
-
-    return sink
+    return epoch_log_sink(index_path, lambda batch_df: minhash_band_signatures(
+        batch_df, num_perm=num_perm, bands=bands, shingle_k=shingle_k
+    ))
 
 
 def lsh_compact(spark: SparkSession, index_path: str) -> int:
@@ -848,26 +755,9 @@ def lsh_compact(spark: SparkSession, index_path: str) -> int:
     crash-safety argument as index_compact — signature state is a SET of
     content-deterministic (id, hs, bands) rows, so duplication during the
     write-then-delete window is absorbed by lsh_read_pairs'
-    dropDuplicates("id") — and the same collision-proof target contract:
-    the compacted epoch id is min(existing + [0]) - 1, strictly below any
-    checkpoint batch id a resumed stream could claim."""
-    import glob as _glob
-    import shutil as _shutil
-
-    epoch_dirs = sorted(_glob.glob(f"{index_path}/epoch=*"))
-    if len(epoch_dirs) <= 1:
-        return 0
-    epoch_ids = [int(d.rsplit("epoch=", 1)[1]) for d in epoch_dirs]
-    target = min(epoch_ids + [0]) - 1
-    merged = (
-        spark.read.parquet(index_path)
-        .select("id", "hs", "bands")
-        .dropDuplicates(["id"])
-    )
-    merged.write.mode("overwrite").parquet(f"{index_path}/epoch={target}")
-    for d in epoch_dirs:
-        _shutil.rmtree(d)
-    return len(epoch_dirs)
+    dropDuplicates("id") — and the same collision-proof negative target
+    (streaming/state.py ``compaction_target``)."""
+    return compact_set_union(spark, index_path, _lsh_signatures)
 
 
 def lsh_read_pairs(
@@ -884,14 +774,17 @@ def lsh_read_pairs(
     into two epochs has bit-identical signature rows, so keeping either is
     correct); equals minhash_lsh_pairs over the same corpus, pinned in
     tests/test_streaming.py."""
-    sig = (
-        spark.read.parquet(index_path)
-        .select("id", "hs", "bands")
-        .dropDuplicates(["id"])
-    )
     from etl_expenses_spark.operators.dedup import lsh_pairs_from_signatures
 
-    return lsh_pairs_from_signatures(sig, min_jaccard=min_jaccard)
+    return lsh_pairs_from_signatures(
+        _lsh_signatures(spark.read.parquet(index_path)), min_jaccard=min_jaccard
+    )
+
+
+def _lsh_signatures(log: DataFrame) -> DataFrame:
+    """One signature row per doc id: a doc re-delivered into two epochs has
+    bit-identical rows, so keeping either is correct."""
+    return log.select("id", "hs", "bands").dropDuplicates(["id"])
 
 
 def hll_state_sink(state_path: str):
@@ -909,35 +802,33 @@ def hll_state_sink(state_path: str):
     state grows with cardinality; sketch state is O(days · 2^lgK) bytes
     forever, and epochs compact by the same set-free union (any epoch
     grouping unions to the same registers)."""
-    from pyspark.sql import functions as F
+    return epoch_log_sink(
+        state_path, lambda batch_df: _daily_sketches(batch_df, F.hll_sketch_agg)
+    )
 
-    def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        daily = (
-            batch_df.select(
-                F.date_trunc("day", F.col("ts")).cast("date").alias("day"),
-                "user_id",
-            )
-            .groupBy("day")
-            .agg(F.hll_sketch_agg("user_id").alias("sk"))
+
+def _daily_sketches(batch_df: DataFrame, sketch_agg) -> DataFrame:
+    """One ``sketch_agg(user_id)`` row per day of ``batch_df``."""
+    return (
+        batch_df.select(
+            F.date_trunc("day", F.col("ts")).cast("date").alias("day"), "user_id"
         )
-        daily.write.mode("overwrite").parquet(f"{state_path}/epoch={epoch_id}")
+        .groupBy("day")
+        .agg(sketch_agg("user_id").alias("sk"))
+    )
 
-    return sink
+
+def _hll_daily(log: DataFrame) -> DataFrame:
+    """Per-day register-max union of an HLL log's sketches."""
+    return log.groupBy("day").agg(F.hll_union_agg("sk").alias("sk"))
 
 
 def hll_read_daily_users(spark: SparkSession, state_path: str) -> DataFrame:
     """Merge-on-read of the sketch MV: union per-epoch sketches per day,
     estimate distinct users. Input to the union is one KB-row per
     (epoch, day) — state-sized, never event-sized."""
-    from pyspark.sql import functions as F
-
-    return (
-        spark.read.parquet(state_path)
-        .groupBy("day")
-        .agg(F.hll_union_agg("sk").alias("sk"))
-        .select("day", F.hll_sketch_estimate("sk").alias("est_users"))
+    return _hll_daily(spark.read.parquet(state_path)).select(
+        "day", F.hll_sketch_estimate("sk").alias("est_users")
     )
 
 
@@ -951,16 +842,9 @@ def hll_read_sliding_users(
     `hll_sliding_7d_users` query computes from raw events — pinned in
     tests — while touching only O(days) KB-sized state rows. The
     streaming system never re-scans events to answer a window question."""
-    from pyspark.sql import functions as F
-
     from etl_expenses_spark.operators.sketchwindow import sliding_hll_estimates
 
-    daily = (
-        spark.read.parquet(state_path)
-        .groupBy("day")
-        .agg(F.hll_union_agg("sk").alias("sk"))
-    )
-    return sliding_hll_estimates(daily, window_days)
+    return sliding_hll_estimates(_hll_daily(spark.read.parquet(state_path)), window_days)
 
 
 def run_events_stream_hll(
@@ -969,13 +853,9 @@ def run_events_stream_hll(
     """availableNow run folding arriving events into the per-day distinct-
     user sketch MV."""
     events = read_event_stream(spark, bronze_dir)
-    (
-        events.writeStream.foreachBatch(hll_state_sink(state_path))
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    start_available_now(
+        events, hll_state_sink(state_path), checkpoint_dir
+    ).awaitTermination()
 
 
 def cms_state_sink(state_path: str, depth: int = 3, width: int = 64):
@@ -994,29 +874,10 @@ def cms_state_sink(state_path: str, depth: int = 3, width: int = 64):
     is the same md5 derivation as the batch twin
     (plans/sketch_ops.py:countmin_user_frequency), so stream==batch grids
     are bit-equal."""
-    from pyspark.sql import functions as F
-
-    def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        # Checkpoint-reset guard: visibility hides epochs <= max_folded once
-        # a manifest exists, so a stream restarted with a fresh/lost
-        # checkpoint (batch ids back at 0) would write epochs that readers
-        # silently never count — undercount with no error. Fail fast
-        # instead; recovery is a new state_path or restoring the checkpoint
-        # (r4 ADVICE).
-        man = _cms_manifest(state_path)
-        if man is not None and int(epoch_id) <= man["max_folded"]:
-            raise RuntimeError(
-                f"cms_state_sink: epoch {int(epoch_id)} <= compacted "
-                f"max_folded {man['max_folded']} at {state_path} — the "
-                "stream's checkpoint was reset after a compaction; rows "
-                "written under replayed epoch ids would be invisible to "
-                "readers. Restore the checkpoint or start a fresh "
-                "state_path."
-            )
-        spark = batch_df.sparkSession
-        ds = spark.range(depth).select(F.col("id").cast("int").alias("d"))
+    def grid(batch_df: DataFrame) -> DataFrame:
+        ds = batch_df.sparkSession.range(depth).select(
+            F.col("id").cast("int").alias("d")
+        )
         bucket = (
             F.conv(
                 F.substring(
@@ -1035,14 +896,33 @@ def cms_state_sink(state_path: str, depth: int = 3, width: int = 64):
             ).cast("long")
             % width
         )
-        grid = (
+        return (
             batch_df.select("user_id")
             .crossJoin(F.broadcast(ds))
             .select("d", bucket.alias("bucket"))
             .groupBy("d", "bucket")
             .agg(F.count(F.lit(1)).alias("c"))
         )
-        grid.write.mode("overwrite").parquet(f"{state_path}/epoch={epoch_id}")
+
+    write = epoch_log_sink(state_path, grid)
+
+    def sink(batch_df: DataFrame, epoch_id: int) -> None:
+        # Checkpoint-reset guard: visibility hides epochs <= max_folded once
+        # a manifest exists, so a stream restarted with a fresh/lost
+        # checkpoint (batch ids back at 0) would write epochs that readers
+        # silently never count — undercount with no error. Fail fast
+        # instead; recovery is a new state_path or restoring the checkpoint.
+        man = _cms_manifest(state_path)
+        if man is not None and int(epoch_id) <= man["max_folded"]:
+            raise RuntimeError(
+                f"cms_state_sink: epoch {int(epoch_id)} <= compacted "
+                f"max_folded {man['max_folded']} at {state_path} — the "
+                "stream's checkpoint was reset after a compaction; rows "
+                "written under replayed epoch ids would be invisible to "
+                "readers. Restore the checkpoint or start a fresh "
+                "state_path."
+            )
+        write(batch_df, epoch_id)
 
     return sink
 
@@ -1055,46 +935,26 @@ def hll_compact(spark: SparkSession, state_path: str) -> int:
     resumed stream could claim), delete the old dirs after — crash-window
     coexistence is absorbed by the union algebra. Contrast cms_compact,
     whose additive grid needs the manifest swap instead."""
-    import glob as _glob
-    import shutil as _shutil
-
-    from pyspark.sql import functions as F
-
-    epoch_dirs = sorted(_glob.glob(f"{state_path}/epoch=*"))
-    if len(epoch_dirs) <= 1:
-        return 0
-    epoch_ids = [int(d.rsplit("epoch=", 1)[1]) for d in epoch_dirs]
-    target = min(epoch_ids + [0]) - 1
-    merged = (
-        spark.read.parquet(state_path)
-        .groupBy("day")
-        .agg(F.hll_union_agg("sk").alias("sk"))
-    )
-    merged.write.mode("overwrite").parquet(f"{state_path}/epoch={target}")
-    for d in epoch_dirs:
-        _shutil.rmtree(d)
-    return len(epoch_dirs)
+    return compact_set_union(spark, state_path, _hll_daily)
 
 
 _CMS_MANIFEST = "_COMPACTED"
 
 
 def _cms_manifest(state_path: str) -> dict | None:
-    import json as _json
-    import os as _os
-
-    man = _os.path.join(state_path, _CMS_MANIFEST)
-    if not _os.path.exists(man):
+    man = os.path.join(state_path, _CMS_MANIFEST)
+    if not os.path.exists(man):
         return None
     with open(man) as f:
-        return _json.load(f)
+        return json.load(f)
 
 
-def _cms_live_epochs(state_path: str) -> list[str]:
-    """Epoch dirs a reader may count, resolved through the compaction
-    manifest. ADDITIVE state cannot use the index/LSH write-then-delete
-    compaction (compacted + stale epochs coexisting in the crash window
-    would DOUBLE-COUNT), so visibility is manifest-gated, WAP-style:
+def _cms_live_epochs(state_path: str) -> dict[int, str]:
+    """Epoch id -> dir for the epochs a reader may count, resolved through
+    the compaction manifest. ADDITIVE state cannot use the index/LSH
+    write-then-delete compaction (compacted + stale epochs coexisting in
+    the crash window would DOUBLE-COUNT), so visibility is manifest-gated,
+    WAP-style:
 
     - no manifest: only non-negative epochs count (an unpublished
       compacted dir a crash left behind is invisible);
@@ -1102,18 +962,20 @@ def _cms_live_epochs(state_path: str) -> list[str]:
       epochs with id > max_folded (new sink batches — checkpoint batch
       ids grow past every folded id by construction). Stale positives
       <= max_folded and orphaned negatives never double-count."""
-    import glob as _glob
-
-    dirs = _glob.glob(f"{state_path}/epoch=*")
-    ids = {int(d.rsplit("epoch=", 1)[1]): d for d in dirs}
+    ids = epoch_dirs(state_path)
     man = _cms_manifest(state_path)
     if man is None:
-        return [d for i, d in ids.items() if i >= 0]
-    return [
-        d
+        return {i: d for i, d in ids.items() if i >= 0}
+    return {
+        i: d
         for i, d in ids.items()
         if i == man["compacted"] or i > man["max_folded"]
-    ]
+    }
+
+
+def _cms_sum(spark: SparkSession, dirs) -> DataFrame:
+    """Cellwise sum of the CMS grids in ``dirs``."""
+    return spark.read.parquet(*dirs).groupBy("d", "bucket").agg(F.sum("c").alias("c"))
 
 
 def cms_read_grid(spark: SparkSession, state_path: str) -> DataFrame:
@@ -1121,9 +983,7 @@ def cms_read_grid(spark: SparkSession, state_path: str) -> DataFrame:
     (manifest-resolved — see _cms_live_epochs). A fresh state dir yields an
     EMPTY grid rather than a confusing no-path py4j error; a manifest that
     points at a MISSING compacted dir is state corruption (silent
-    undercount) and raises, naming the path (r4 ADVICE)."""
-    from pyspark.sql import functions as F
-
+    undercount) and raises, naming the path."""
     live = _cms_live_epochs(state_path)
     if not live:
         man = _cms_manifest(state_path)
@@ -1135,11 +995,7 @@ def cms_read_grid(spark: SparkSession, state_path: str) -> DataFrame:
                 "silently undercount. Restore it or rebuild the state."
             )
         return spark.createDataFrame([], "d int, bucket bigint, c bigint")
-    return (
-        spark.read.parquet(*live)
-        .groupBy("d", "bucket")
-        .agg(F.sum("c").alias("c"))
-    )
+    return _cms_sum(spark, live.values())
 
 
 def cms_compact(spark: SparkSession, state_path: str) -> int:
@@ -1162,18 +1018,8 @@ def cms_compact(spark: SparkSession, state_path: str) -> int:
     manifest-swap commit on the epoch-log layout — the two compaction
     regimes side by side: set-semantics state folds in place
     (index_compact/lsh_compact), additive state swaps a manifest."""
-    import glob as _glob
-    import json as _json
-    import os as _os
-    import shutil as _shutil
-
-    from pyspark.sql import functions as F
-
     man = _cms_manifest(state_path)
-    all_ids = {
-        int(d.rsplit("epoch=", 1)[1]): d
-        for d in _glob.glob(f"{state_path}/epoch=*")
-    }
+    all_ids = epoch_dirs(state_path)
     # reap garbage a previous crashed/cleaned compaction left behind
     for i, d in list(all_ids.items()):
         stale = (
@@ -1181,29 +1027,23 @@ def cms_compact(spark: SparkSession, state_path: str) -> int:
             or (man is not None and i != man["compacted"] and i <= man["max_folded"])
         )
         if stale:
-            _shutil.rmtree(d)
+            shutil.rmtree(d)
             del all_ids[i]
     live = _cms_live_epochs(state_path)
     if len(live) <= 1:
         return 0
-    live_ids = [int(d.rsplit("epoch=", 1)[1]) for d in live]
-    target = min(list(all_ids) + [0]) - 1
-    folded = (
-        spark.read.parquet(*live)
-        .groupBy("d", "bucket")
-        .agg(F.sum("c").alias("c"))
-    )
-    staging = _os.path.join(state_path, f".compact_staging_{-target}")
-    folded.write.mode("overwrite").parquet(staging)
-    _os.rename(staging, _os.path.join(state_path, f"epoch={target}"))
-    new_man = {"compacted": target, "max_folded": max(max(live_ids), (man or {}).get("max_folded", -1))}
-    tmp = _os.path.join(state_path, _CMS_MANIFEST + ".tmp")
+    target = compaction_target(all_ids)
+    staging = os.path.join(state_path, f".compact_staging_{-target}")
+    _cms_sum(spark, live.values()).write.mode("overwrite").parquet(staging)
+    os.rename(staging, os.path.join(state_path, f"epoch={target}"))
+    new_man = {"compacted": target, "max_folded": max(max(live), (man or {}).get("max_folded", -1))}
+    tmp = os.path.join(state_path, _CMS_MANIFEST + ".tmp")
     with open(tmp, "w") as f:
-        _json.dump(new_man, f)
-    _os.replace(tmp, _os.path.join(state_path, _CMS_MANIFEST))
-    for d in live:
-        if d != _os.path.join(state_path, f"epoch={target}"):
-            _shutil.rmtree(d)
+        json.dump(new_man, f)
+    os.replace(tmp, os.path.join(state_path, _CMS_MANIFEST))
+    for d in live.values():
+        if d != os.path.join(state_path, f"epoch={target}"):
+            shutil.rmtree(d)
     return len(live)
 
 
@@ -1213,13 +1053,9 @@ def run_events_stream_cms(
     """availableNow run folding arriving events into the CMS frequency
     grid."""
     events = read_event_stream(spark, bronze_dir)
-    (
-        events.writeStream.foreachBatch(cms_state_sink(state_path))
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    start_available_now(
+        events, cms_state_sink(state_path), checkpoint_dir
+    ).awaitTermination()
 
 
 def theta_state_sink(state_path: str):
@@ -1232,30 +1068,15 @@ def theta_state_sink(state_path: str):
     braces. Downstream, theta_retention_daily's intersection/difference
     algebra runs directly on the merged per-day sketches — streaming
     retention under ingest."""
-    from pyspark.sql import functions as F
-
-    def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        daily = (
-            batch_df.select(
-                F.date_trunc("day", F.col("ts")).cast("date").alias("day"),
-                "user_id",
-            )
-            .groupBy("day")
-            .agg(F.theta_sketch_agg("user_id").alias("sk"))
-        )
-        daily.write.mode("overwrite").parquet(f"{state_path}/epoch={epoch_id}")
-
-    return sink
+    return epoch_log_sink(
+        state_path, lambda batch_df: _daily_sketches(batch_df, F.theta_sketch_agg)
+    )
 
 
 def theta_read_retention(spark: SparkSession, state_path: str) -> DataFrame:
     """Merge-on-read: union per-epoch day sketches, then consecutive-day
     intersection/difference estimates — the streaming twin of the
     theta_retention_daily batch query (plans/sketch_ops.py)."""
-    from pyspark.sql import functions as F
-
     sk = (
         spark.read.parquet(state_path)
         .groupBy("day")
@@ -1286,13 +1107,9 @@ def run_events_stream_theta(
     """availableNow run folding arriving events into per-day theta
     sketches."""
     events = read_event_stream(spark, bronze_dir)
-    (
-        events.writeStream.foreachBatch(theta_state_sink(state_path))
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    start_available_now(
+        events, theta_state_sink(state_path), checkpoint_dir
+    ).awaitTermination()
 
 
 def kll_state_sink(state_path: str):
@@ -1305,17 +1122,9 @@ def kll_state_sink(state_path: str):
     error (~1.65% at default k), pinned by a rank-tolerance test rather
     than stream==batch bit equality. Same overwrite-per-epoch replay
     contract as the other sinks."""
-    from pyspark.sql import functions as F
-
-    def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        sk = batch_df.agg(
-            F.kll_sketch_agg_double(F.col("value").cast("double")).alias("sk")
-        )
-        sk.write.mode("overwrite").parquet(f"{state_path}/epoch={epoch_id}")
-
-    return sink
+    return epoch_log_sink(state_path, lambda batch_df: batch_df.agg(
+        F.kll_sketch_agg_double(F.col("value").cast("double")).alias("sk")
+    ))
 
 
 def kll_read_quantiles(
@@ -1323,8 +1132,6 @@ def kll_read_quantiles(
 ) -> DataFrame:
     """Merge-on-read of the KLL state: fold per-epoch sketches, read
     quantiles. One KB-row per epoch enters the merge."""
-    from pyspark.sql import functions as F
-
     merged = spark.read.parquet(state_path).agg(
         F.kll_merge_agg_double("sk").alias("sk")
     )
@@ -1342,13 +1149,9 @@ def run_events_stream_kll(
     """availableNow run folding arriving event values into the KLL
     quantile state."""
     events = read_event_stream(spark, bronze_dir)
-    (
-        events.writeStream.foreachBatch(kll_state_sink(state_path))
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    start_available_now(
+        events, kll_state_sink(state_path), checkpoint_dir
+    ).awaitTermination()
 
 
 def run_docs_stream_lsh(
@@ -1357,10 +1160,6 @@ def run_docs_stream_lsh(
     """availableNow run folding arriving documents into the incremental
     LSH signature log — streaming near-dup detection under ingest."""
     docs = read_document_stream(spark, bronze_dir)
-    (
-        docs.writeStream.foreachBatch(lsh_state_sink(index_path))
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    start_available_now(
+        docs, lsh_state_sink(index_path), checkpoint_dir
+    ).awaitTermination()

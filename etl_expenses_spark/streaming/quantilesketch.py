@@ -10,32 +10,22 @@ Misra-Gries sink's (whose summary content depends on batching and needs a
 recount pass): here the state itself is the canonical sketch, so the
 driver query gets a REAL declarative oracle, not a golden.
 
-State layout and commit protocol mirror streaming/heavyhitters.py exactly
-(the audited pattern): epoch-versioned ``state-{epoch}.parquet`` (k rows of
-(rk string, v bigint)), ``_meta.json`` swapped atomically via
-tempfile+os.replace, stale states GC'd after the swap. Replay of the one
-in-flight epoch is skipped (its commit completed); an epoch BELOW the
-committed last_epoch means a lost/reset checkpoint and FAILS FAST — the
-r6-audited exactly-once discipline shared by every state sink here.
+State: ``state-{epoch}.parquet`` holds the k (rk string, v bigint) rows
+of the sketch and the ledger's ``total`` counts every streamed row. Commit
+protocol, replay skip and reset-checkpoint fail-fast are the versioned-
+state ledger of streaming/state.py.
 """
 
 from __future__ import annotations
 
-import json
-import os
-import shutil
-import tempfile
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def _read_meta(state_dir: str) -> dict:
-    meta_path = os.path.join(state_dir, "_meta.json")
-    if os.path.exists(meta_path):
-        with open(meta_path) as f:
-            return json.load(f)
-    return {"total": 0, "last_epoch": -1, "state": None}
+from etl_expenses_spark.streaming.state import (
+    ledger_sink,
+    read_state,
+    start_available_now,
+)
 
 
 def bottomk_state_sink(
@@ -59,20 +49,7 @@ def bottomk_state_sink(
             f"(got {rows.columns})"
         )
 
-    def fold(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
-        meta = _read_meta(state_dir)
-        if epoch_id == meta["last_epoch"]:
-            return  # replay of the one batch whose commit completed
-        if epoch_id < meta["last_epoch"]:
-            raise RuntimeError(
-                f"bottomk_state_sink: epoch {int(epoch_id)} < committed "
-                f"last_epoch {meta['last_epoch']} at {state_dir} — the "
-                "stream's checkpoint was lost or reset; silently skipping "
-                "would drop new data. Restore the checkpoint or start a "
-                "fresh state_dir."
-            )
-        batch_n = batch_df.count()
+    def fold(batch_df: DataFrame, prev: DataFrame | None):
         # ties ordered by (rk, v) — the same total order as the batch
         # sketch's array_sort over (rk, cents) structs, so which tied row
         # survives the k-cut is deterministic and the byte-identical-state
@@ -80,41 +57,12 @@ def bottomk_state_sink(
         batch_k = batch_df.select(
             F.col(rank_col).alias("rk"), F.col(value_col).alias("v")
         ).orderBy("rk", "v").limit(k)
-        if meta["state"]:
-            prev = spark.read.parquet(os.path.join(state_dir, meta["state"]))
+        if prev is not None:
             batch_k = batch_k.unionByName(prev)
-        new_state = batch_k.orderBy("rk", "v").limit(k)
+        return batch_k.orderBy("rk", "v").limit(k).coalesce(1), batch_df.count()
 
-        state_name = f"state-{int(epoch_id)}.parquet"
-        new_state.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(state_dir, state_name)
-        )
-        fd, tmp = tempfile.mkstemp(dir=state_dir, prefix="._meta")
-        with os.fdopen(fd, "w") as f:
-            json.dump(
-                {"total": meta["total"] + batch_n,
-                 "last_epoch": int(epoch_id), "state": state_name}, f
-            )
-        os.replace(tmp, os.path.join(state_dir, "_meta.json"))
-        for name in os.listdir(state_dir):
-            if name != state_name and name.startswith("state-"):
-                shutil.rmtree(os.path.join(state_dir, name),
-                              ignore_errors=True)
-            elif name.startswith("._meta"):
-                # a crash between mkstemp and os.replace leaks the temp
-                # meta file; it is dead the moment any later commit lands,
-                # so sweep leftovers here rather than forever
-                try:
-                    os.unlink(os.path.join(state_dir, name))
-                except OSError:
-                    pass
-
-    os.makedirs(state_dir, exist_ok=True)
-    return (
-        rows.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return start_available_now(
+        rows, ledger_sink(state_dir, "bottomk_state_sink", fold), checkpoint_dir
     )
 
 
@@ -122,12 +70,7 @@ def quantiles_from_state(spark, state_dir: str, ps=(0.5, 0.9)) -> DataFrame:
     """One-row DataFrame (n_in_sketch, q_<p> ...) from the committed
     state: nearest-rank elements at index 1 + floor(p·(n−1)) of the
     value-sorted k-sample — the same estimator as the batch sketch."""
-    meta = _read_meta(state_dir)
-    if meta["state"] is None:
-        raise RuntimeError(
-            f"quantiles_from_state: no committed state at {state_dir}"
-        )
-    st = spark.read.parquet(os.path.join(state_dir, meta["state"]))
+    st, _ = read_state(spark, state_dir, "quantiles_from_state")
     agg = st.agg(F.array_sort(F.collect_list("v")).alias("vals"))
     n = F.size("vals")
     cols = [n.cast("bigint").alias("n_in_sketch")]

@@ -121,11 +121,11 @@ def test_ivm_stream_fold_matches_one_shot(spark, tmp_path):
     import pytest
 
     from etl_expenses_spark.streaming.ivm_sink import (
-        _read_meta,
         init_view_state,
         ivm_state_sink,
         read_view,
     )
+    from etl_expenses_spark.streaming.state import read_meta as _read_meta
 
     feed = str(tmp_path / "cdc")
     state = str(tmp_path / "state")

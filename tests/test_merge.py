@@ -132,3 +132,32 @@ def test_merge_append_evolve_add_column_and_widen(spark, tmp_path):
         merge_append_evolve(bad, g, keys=["k"])
     # the table stayed readable throughout
     assert read_evolved(spark, g).count() == 4
+
+
+def test_gold_read_loads_first_batch_only_for_missing_or_empty_target(spark, tmp_path):
+    """A missing or empty gold dir is a first load (the full batch is
+    appended); a gold dir whose read fails for any other reason raises
+    and appends nothing, for both append paths."""
+    import os
+
+    import pytest as _pytest
+
+    from etl_expenses_spark.operators.merge import merge_append_evolve
+
+    batch = spark.createDataFrame([(1, "a"), (2, "b")], "k long, v string")
+    for load in (merge_append, merge_append_evolve):
+        missing = tmp_path / f"{load.__name__}_missing"
+        assert load(batch, str(missing), keys=["k"]) == 2
+        assert spark.read.parquet(str(missing)).count() == 2
+
+        empty = tmp_path / f"{load.__name__}_empty"
+        empty.mkdir()
+        assert load(batch, str(empty), keys=["k"]) == 2
+        assert spark.read.parquet(str(empty)).count() == 2
+
+        broken = tmp_path / f"{load.__name__}_broken"
+        broken.mkdir()
+        (broken / "notes.txt").write_text("not a parquet file")
+        with _pytest.raises(Exception, match="not a Parquet file"):
+            load(batch, str(broken), keys=["k"])
+        assert os.listdir(broken) == ["notes.txt"]

@@ -158,10 +158,10 @@ def test_bottomk_stream_state_equals_batch_sketch(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from etl_expenses_spark.streaming.quantilesketch import (
-        _read_meta,
         bottomk_state_sink,
         quantiles_from_state,
     )
+    from etl_expenses_spark.streaming.state import read_meta as _read_meta
 
     rows = spark.range(1, 1501).select(
         F.substring(F.md5(F.col("id").cast("string")), 1, 16).alias("rk"),

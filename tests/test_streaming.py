@@ -1264,43 +1264,85 @@ def test_stream_lsh_index_equals_batch_pairs(spark, dirs):
     assert final == want
 
 
-def test_compaction_crash_window_coexistence(spark, dirs):
+# set-union epoch logs: (sink, compactor, reader, input table, first-batch filter)
+_SET_UNION_LOGS = {
+    "index": ("index_state_sink", "index_compact", "index_read",
+              "documents", "doc_id < 200"),
+    "lsh": ("lsh_state_sink", "lsh_compact", "lsh_read_pairs",
+            "documents", "doc_id < 200"),
+    "hll": ("hll_state_sink", "hll_compact", "hll_read_daily_users",
+            "events", "event_id % 2 = 0"),
+}
+
+
+@pytest.mark.parametrize("log", list(_SET_UNION_LOGS))
+def test_compaction_crash_window_coexistence(spark, dirs, log):
     """The compaction crash window: compacted epoch written, old epoch
     dirs NOT yet deleted (crash between the two). Set-union merge-on-read
-    must absorb the duplication — the merged index with compacted + stale
-    epochs coexisting equals the clean index. Simulated by duplicating the
+    must absorb the duplication — the merged state with compacted + stale
+    epochs coexisting equals the clean state. Simulated by duplicating the
     compacted dir under a stale epoch id — set-union is idempotent under
     ANY duplication, subset or full, so this covers the crash leftovers."""
     import glob
     import shutil
 
-    from etl_expenses_spark.streaming.pipeline import (
-        index_compact,
-        index_read,
-        index_state_sink,
-    )
+    from etl_expenses_spark.streaming import pipeline
+
+    sink_name, compact_name, read_name, table, first = _SET_UNION_LOGS[log]
+    compact = getattr(pipeline, compact_name)
+    read = getattr(pipeline, read_name)
 
     bronze, gold, ckpt, _ = dirs
-    docs = load_table(spark, SF_DIR, "documents")
-    idx = str(gold) + "_crashidx"
-    sink = index_state_sink(idx)
-    sink(docs.filter(F.col("doc_id") < 200), 0)
-    sink(docs.filter(F.col("doc_id") >= 200), 1)
-    clean = {(r.tok, r.df, tuple(r.postings)) for r in index_read(spark, idx).collect()}
+    rows = load_table(spark, SF_DIR, table)
+    idx = str(gold) + "_crash" + log
+    sink = getattr(pipeline, sink_name)(idx)
+    sink(rows.filter(first), 0)
+    sink(rows.filter(f"NOT ({first})"), 1)
 
-    assert index_compact(spark, idx) == 2
+    def merged():
+        return {
+            tuple(tuple(v) if isinstance(v, list) else v for v in r)
+            for r in read(spark, idx).collect()
+        }
+
+    clean = merged()
+    assert clean
+
+    assert compact(spark, idx) == 2
     # crash simulation: duplicate state still on disk alongside the
     # compacted epoch
     shutil.copytree(idx + "/epoch=-1", idx + "/epoch=0")
-    dirty = {(r.tok, r.df, tuple(r.postings)) for r in index_read(spark, idx).collect()}
+    dirty = merged()
     assert dirty == clean
 
     # re-running compaction converges: folds the duplicate away, result
     # still equal, single directory again
-    assert index_compact(spark, idx) == 2
+    assert compact(spark, idx) == 2
     assert len(glob.glob(idx + "/epoch=*")) == 1
-    final = {(r.tok, r.df, tuple(r.postings)) for r in index_read(spark, idx).collect()}
+    final = merged()
     assert final == clean
+
+
+@pytest.mark.parametrize(
+    "sink_name",
+    ["mv", "index", "lsh", "hll", "cms", "theta", "kll", "pit_enrich"],
+)
+def test_epoch_log_sink_skips_empty_batch(spark, dirs, sink_name):
+    """An empty micro-batch writes no ``epoch=`` dir in any epoch-log
+    sink, so merge-on-read never sees an empty partial state."""
+    import glob
+
+    from etl_expenses_spark.streaming import pipeline
+
+    bronze, gold, ckpt, _ = dirs
+    path = str(gold) + "_" + sink_name
+    if sink_name == "pit_enrich":
+        sink = pipeline.pit_enrich_sink(str(gold) + "_dim", path)
+    else:
+        sink = getattr(pipeline, f"{sink_name}_state_sink")(path)
+    table = "documents" if sink_name in ("index", "lsh") else "events"
+    sink(load_table(spark, SF_DIR, table).limit(0), 0)
+    assert not glob.glob(path + "/epoch=*")
 
 
 def test_index_compaction_survives_checkpointed_resume(spark, dirs):
