@@ -1,28 +1,44 @@
-"""Write-audit-publish: transactional-ish batch gold writes on plain parquet.
+"""Write-audit-publish: atomic batch commits on plain parquet.
 
 Plain parquet directory appends are not atomic: a crashed job leaves partial
-files that readers see. The reference handles failure with a compensation
-lambda that issues rollback UPDATEs and deletes temp objects
-(`/root/reference/compensation_flow/lambda_function.py:34-56`). The batch
-engine replaces that with the write-audit-publish protocol:
+files that readers see. The reference recovers from a failed load with a
+compensation lambda that issues rollback UPDATEs and deletes temp objects
+(its ``compensation_flow/lambda_function.py:34-56``). This engine commits
+every batch write through one sequence instead (``_publish``):
 
-1. WRITE the batch to an unpublished versioned staging dir,
-2. AUDIT the staged data by re-reading it (row gates, invariants),
-3. PUBLISH by atomically renaming the version dir into the table root and
-   atomically replacing the ``_CURRENT`` manifest readers resolve.
+1. CLAIM the next version number (an O_EXCL marker ``_staging/v{N}.claim``);
+2. WRITE the batch to ``_staging/v{N}``, which no manifest names;
+3. AUDIT what was actually written; a rejection deletes the stage and
+   raises ValueError with the table untouched;
+4. PUBLISH: rename the stage to ``v{N}``, replace the ``_CURRENT`` manifest
+   readers resolve (append: committed + [N]; replace: [N]) with
+   ``atomic_write``, and append the snapshot to ``_HISTORY``;
+5. RELEASE the claim.
 
-A crash before step 3 leaves garbage only in ``_staging`` (never visible);
-a failed audit never publishes. Readers always see a consistent set of
-fully-written versions — no torn reads, no rollback logic. This is the same
-commit-protocol shape table formats (Iceberg/Delta) productionize; local
-``os.replace`` stands in for the metastore swap and is atomic on any POSIX
-filesystem.
+The public writers differ only in what they write and how they audit:
+``publish_append``/``publish_replace`` re-read the stage, ``publish_append_
+observed`` checks the ``df.observe`` metrics its own write job collected,
+and ``compact_published`` writes a coalesced copy and checks the row count.
+
+A version a stream epoch published records that epoch in ``v{N}/_EPOCH``
+(the parquet reader skips ``_`` files), and a replace carries the table's
+highest epoch forward, so a replayed epoch is recognised even after a
+compaction (streaming/pipeline.py ``run_events_stream_to_wap``).
+
+A crash before the manifest swap leaves garbage only in ``_staging`` or in
+an unnamed version dir (``vacuum`` reaps both); readers always see a
+consistent set of fully written versions. This is the commit shape of table
+formats (Armbrust et al., *Delta Lake*, VLDB 2020): a version becomes
+visible through one atomic metadata swap. ``os.replace`` stands in for the
+metastore swap and is atomic on any POSIX filesystem.
 """
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
+import tempfile
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -32,15 +48,54 @@ AuditFn = Callable[[DataFrame], str | None]  # error message or None = pass
 _CURRENT = "_CURRENT"
 _STAGING = "_staging"
 _HISTORY = "_HISTORY"
+_EPOCH = "_EPOCH"
+
+
+def atomic_write(path: str, text: str) -> None:
+    """Make ``text`` the content of ``path`` in one step: write a temp file
+    beside it and ``os.replace`` it over ``path``, so a reader sees the old
+    content or the new, never a torn file. A crash in between leaks the
+    temp (``.<name>…``), which the owner's GC reaps; nothing cleans up here,
+    since a real crash could not either. ``os.replace`` is called through
+    the ``os`` module so a fail-point on it tears the commit."""
+    fd, tmp = tempfile.mkstemp(
+        dir=os.path.dirname(path), prefix="." + os.path.basename(path)
+    )
+    with os.fdopen(fd, "w") as f:
+        f.write(text)
+    os.replace(tmp, path)
+
+
+def _read(path: str) -> str:
+    """The text of a file; empty while it does not exist."""
+    if not os.path.exists(path):
+        return ""
+    with open(path) as f:
+        return f.read().strip()
+
+
+def read_json(path: str, default):
+    """The JSON ``atomic_write`` committed at ``path``; ``default`` before
+    the first commit."""
+    text = _read(path)
+    return json.loads(text) if text else default
+
+
+def _ints(csv: str) -> list[int]:
+    return [int(v) for v in csv.split(",") if v]
 
 
 def _committed_versions(table_root: str) -> list[int]:
-    cur = os.path.join(table_root, _CURRENT)
-    if not os.path.exists(cur):
-        return []
-    with open(cur) as f:
-        content = f.read().strip()
-    return [int(v) for v in content.split(",") if v]
+    return _ints(_read(os.path.join(table_root, _CURRENT)))
+
+
+def _last_epoch(table_root: str) -> int:
+    """The highest stream epoch a committed version recorded; -1 if none."""
+    return max(
+        (int(_read(os.path.join(table_root, f"v{v}", _EPOCH)) or -1)
+         for v in _committed_versions(table_root)),
+        default=-1,
+    )
 
 
 def _claim_version(table_root: str) -> tuple[int, str]:
@@ -55,12 +110,62 @@ def _claim_version(table_root: str) -> tuple[int, str]:
     version = (max(committed) + 1) if committed else 1
     while True:
         marker = os.path.join(table_root, _STAGING, f"v{version}.claim")
-        try:
-            fd = os.open(marker, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-            os.close(fd)
-            return version, marker
-        except FileExistsError:
-            version += 1
+        # skip a version dir a crash left between its rename and the swap
+        if not os.path.exists(os.path.join(table_root, f"v{version}")):
+            try:
+                os.close(os.open(marker, os.O_CREAT | os.O_EXCL | os.O_WRONLY))
+                return version, marker
+            except FileExistsError:
+                pass
+        version += 1
+
+
+def _publish(
+    table_root: str,
+    write: Callable[[str], None],
+    audit: Callable[[str], str | None],
+    replace: bool = False,
+    epoch: int = -1,
+) -> int:
+    """The one commit sequence (module docstring): ``write(staged)`` stages
+    the batch, ``audit(staged)`` returns an error message or None. A stream
+    sink passes its ``epoch`` (>= 0) to record it in the version dir."""
+    version, marker = _claim_version(table_root)
+    staged = os.path.join(table_root, _STAGING, f"v{version}")
+    final = os.path.join(table_root, f"v{version}")
+    try:
+        write(staged)
+        err = audit(staged)
+        if err is not None:
+            shutil.rmtree(staged, ignore_errors=True)
+            raise ValueError(f"audit rejected staged v{version}: {err}")
+        if replace:  # carry the epochs of the versions it drops forward
+            epoch = max(epoch, _last_epoch(table_root))
+        if epoch >= 0:
+            with open(os.path.join(staged, _EPOCH), "w") as f:
+                f.write(str(epoch))
+        os.replace(staged, final)
+        # re-read the manifest here, not at claim time: narrowest window
+        manifest = [version] if replace else _committed_versions(table_root) + [version]
+        atomic_write(os.path.join(table_root, _CURRENT), ",".join(map(str, manifest)))
+        _append_history(table_root, version, manifest)
+    finally:
+        if os.path.exists(marker):
+            os.remove(marker)
+    return version
+
+
+def _reread(spark: SparkSession, audits: list[AuditFn] | None):
+    """A staged-path audit that re-reads the stage and runs ``audits`` on
+    what was actually written, not on the in-flight plan."""
+
+    def audit(staged: str) -> str | None:
+        if not audits:
+            return None
+        staged_df = spark.read.parquet(staged)
+        return next((e for a in audits if (e := a(staged_df)) is not None), None)
+
+    return audit
 
 
 def publish_append(
@@ -74,35 +179,7 @@ def publish_append(
     Returns the published version number; raises ValueError (table
     untouched) if any audit rejects the staged data.
     """
-    version, marker = _claim_version(table_root)
-    staged = os.path.join(table_root, _STAGING, f"v{version}")
-    final = os.path.join(table_root, f"v{version}")
-
-    try:
-        # WRITE — invisible to readers (staging dir is not in any manifest)
-        df.write.mode("overwrite").parquet(staged)
-
-        # AUDIT — on what was actually written, not the in-flight plan
-        staged_df = spark.read.parquet(staged)
-        for audit in audits or []:
-            err = audit(staged_df)
-            if err is not None:
-                shutil.rmtree(staged, ignore_errors=True)
-                raise ValueError(f"audit rejected staged v{version}: {err}")
-
-        # PUBLISH — two renames, each atomic; readers resolve _CURRENT so the
-        # new version is invisible until the manifest swap (the second rename)
-        os.replace(staged, final)
-        committed = _committed_versions(table_root)  # re-read: narrowest window
-        tmp = os.path.join(table_root, f"{_CURRENT}.tmp")
-        with open(tmp, "w") as f:
-            f.write(",".join(str(v) for v in committed + [version]))
-        os.replace(tmp, os.path.join(table_root, _CURRENT))
-        _append_history(table_root, version, committed + [version])
-    finally:
-        if os.path.exists(marker):
-            os.remove(marker)
-    return version
+    return _publish(table_root, df.write.mode("overwrite").parquet, _reread(spark, audits))
 
 
 def publish_replace(
@@ -118,27 +195,8 @@ def publish_replace(
     snapshot log (read_as_of) until vacuum — exactly the table-format
     contract: a merge creates a new snapshot, it never rewrites history.
     """
-    version, marker = _claim_version(table_root)
-    staged = os.path.join(table_root, _STAGING, f"v{version}")
-    final = os.path.join(table_root, f"v{version}")
-    try:
-        df.write.mode("overwrite").parquet(staged)
-        staged_df = spark.read.parquet(staged)
-        for audit in audits or []:
-            err = audit(staged_df)
-            if err is not None:
-                shutil.rmtree(staged, ignore_errors=True)
-                raise ValueError(f"audit rejected staged v{version}: {err}")
-        os.replace(staged, final)
-        tmp = os.path.join(table_root, f"{_CURRENT}.tmp")
-        with open(tmp, "w") as f:
-            f.write(str(version))
-        os.replace(tmp, os.path.join(table_root, _CURRENT))
-        _append_history(table_root, version, [version])
-    finally:
-        if os.path.exists(marker):
-            os.remove(marker)
-    return version
+    return _publish(table_root, df.write.mode("overwrite").parquet,
+                    _reread(spark, audits), replace=True)
 
 
 def read_published(spark: SparkSession, table_root: str) -> DataFrame:
@@ -155,8 +213,6 @@ def audit_min_rows(n: int) -> AuditFn:
 
 def audit_no_nulls(cols: list[str]) -> AuditFn:
     def check(df: DataFrame) -> str | None:
-        from pyspark.sql import functions as F
-
         bad = df.filter(
             " OR ".join(f"{c} IS NULL" for c in cols)
         ).limit(1).count() if cols else 0
@@ -186,13 +242,16 @@ def audit_metrics_single_pass(
     """
 
     def check(df: DataFrame) -> str | None:
-        row = df.agg(*[c.alias(n) for n, c, _ in rules]).first()
-        for n, _, pred in rules:
-            if not pred(row[n]):
-                return f"metric rule '{n}' failed (value={row[n]!r})"
-        return None
+        return _rule_failure(rules, df.agg(*[c.alias(n) for n, c, _ in rules]).first())
 
     return check
+
+
+def _rule_failure(rules, values) -> str | None:
+    for n, _, pred in rules:
+        if not pred(values[n]):
+            return f"metric rule '{n}' failed (value={values[n]!r})"
+    return None
 
 
 def publish_append_observed(
@@ -213,34 +272,12 @@ def publish_append_observed(
     """
     from pyspark.sql import Observation
 
-    version, marker = _claim_version(table_root)
-    staged = os.path.join(table_root, _STAGING, f"v{version}")
-    final = os.path.join(table_root, f"v{version}")
-
-    try:
-        obs = Observation(f"wap_audit_v{version}")
-        observed = df.observe(obs, *[c.alias(n) for n, c, _ in rules])
-        observed.write.mode("overwrite").parquet(staged)  # WRITE (+ metrics)
-
-        metrics = obs.get  # AUDIT — already computed by the write job
-        for n, _, pred in rules:
-            if not pred(metrics[n]):
-                shutil.rmtree(staged, ignore_errors=True)
-                raise ValueError(
-                    f"observed audit rejected staged v{version}: "
-                    f"rule '{n}' failed (value={metrics[n]!r})"
-                )
-
-        os.replace(staged, final)  # PUBLISH
-        committed = _committed_versions(table_root)
-        tmp = os.path.join(table_root, f"{_CURRENT}.tmp")
-        with open(tmp, "w") as f:
-            f.write(",".join(str(v) for v in committed + [version]))
-        os.replace(tmp, os.path.join(table_root, _CURRENT))
-    finally:
-        if os.path.exists(marker):
-            os.remove(marker)
-    return version
+    obs = Observation()
+    observed = df.observe(obs, *[c.alias(n) for n, c, _ in rules])
+    return _publish(
+        table_root, observed.write.mode("overwrite").parquet,
+        lambda _staged: _rule_failure(rules, obs.get),
+    )
 
 
 def compact_published(
@@ -258,51 +295,35 @@ def compact_published(
     here is just WAP again: WRITE the coalesced copy as the next version,
     AUDIT nothing changed (row count preserved — cheap, metadata-only on
     parquet), PUBLISH a manifest naming only the compacted version. Old
-    version dirs stay on disk for time-travel-ish debugging (a real table
-    format would garbage-collect them after a retention window).
+    version dirs stay on disk for time travel until ``vacuum``.
     """
-    committed = _committed_versions(table_root)
-    if not committed:
-        raise FileNotFoundError(f"no published versions under {table_root}")
     current = read_published(spark, table_root)
     n_before = current.count()
 
-    version, marker = _claim_version(table_root)
-    staged = os.path.join(table_root, _STAGING, f"v{version}")
-    final = os.path.join(table_root, f"v{version}")
-    try:
-        current.coalesce(target_files).write.mode("overwrite").parquet(staged)
-
+    def audit(staged: str) -> str | None:
         n_after = spark.read.parquet(staged).count()
-        if n_after != n_before:
-            shutil.rmtree(staged, ignore_errors=True)
-            raise ValueError(f"compaction row drift: {n_before} -> {n_after}")
+        return None if n_after == n_before else f"compaction row drift: {n_before} -> {n_after}"
 
-        os.replace(staged, final)
-        tmp = os.path.join(table_root, f"{_CURRENT}.tmp")
-        with open(tmp, "w") as f:
-            f.write(str(version))  # manifest now names ONLY the compacted version
-        os.replace(tmp, os.path.join(table_root, _CURRENT))
-        _append_history(table_root, version, [version])
-    finally:
-        if os.path.exists(marker):
-            os.remove(marker)
-    return version
+    return _publish(
+        table_root, current.coalesce(target_files).write.mode("overwrite").parquet,
+        audit, replace=True,
+    )
 
 
 def vacuum(table_root: str, keep_unreferenced: bool = False) -> list[str]:
     """Remove files no reader can see: leftover ``_staging`` writes (crashed
-    or audit-rejected jobs) and version dirs no longer named by the
-    manifest (superseded by compaction). Returns the removed paths.
+    or audit-rejected jobs), version dirs no longer named by the manifest
+    (superseded by compaction) and ``._CURRENT*`` temps a crashed manifest
+    swap leaked. Returns the removed paths.
 
     Safe by construction: the manifest (_CURRENT) is the single source of
     reader truth and this only deletes paths outside it — the analog of a
     table format's expire-snapshots/vacuum with retention zero. Anything
     versioned NEWER than the manifest's high-water mark is skipped: it may
     belong to a concurrent publisher that claimed/renamed its version dir
-    but has not yet swapped the manifest. Pass ``keep_unreferenced=True``
-    to drop only staging garbage and retain superseded versions for
-    debugging.
+    but has not yet swapped the manifest, and while such a publisher may be
+    in flight the manifest temps are left alone too. Pass
+    ``keep_unreferenced=True`` to keep superseded versions for debugging.
     """
 
     def _vnum(name: str) -> int | None:
@@ -314,29 +335,33 @@ def vacuum(table_root: str, keep_unreferenced: bool = False) -> list[str]:
     committed = _committed_versions(table_root)
     high_water = max(committed) if committed else 0
     removed: list[str] = []
+    in_flight = False
     staging_root = os.path.join(table_root, _STAGING)
     if os.path.isdir(staging_root):
         for leftover in sorted(os.listdir(staging_root)):
             v = _vnum(leftover)
             if v is not None and v > high_water:
-                continue  # possibly a concurrent writer's in-flight stage/claim
+                in_flight = True  # possibly a concurrent writer's stage/claim
+                continue
             p = os.path.join(staging_root, leftover)
             shutil.rmtree(p, ignore_errors=True) if os.path.isdir(p) else os.remove(p)
             removed.append(p)
-    if not keep_unreferenced:
-        live = {f"v{v}" for v in committed}
-        for entry in sorted(os.listdir(table_root)):
-            p = os.path.join(table_root, entry)
-            v = _vnum(entry)
-            if (
-                os.path.isdir(p)
-                and v is not None
-                and entry not in live
-                and v <= high_water
-                and entry != _STAGING
-            ):
-                shutil.rmtree(p, ignore_errors=True)
-                removed.append(p)
+    live = {f"v{v}" for v in committed}
+    for entry in sorted(os.listdir(table_root)):
+        p = os.path.join(table_root, entry)
+        v = _vnum(entry)
+        if entry.startswith("." + _CURRENT) and not in_flight:
+            os.remove(p)  # a manifest temp a crashed atomic_write leaked
+            removed.append(p)
+        elif (
+            not keep_unreferenced
+            and os.path.isdir(p)
+            and v is not None
+            and entry not in live
+            and v <= high_water
+        ):
+            shutil.rmtree(p, ignore_errors=True)
+            removed.append(p)
     return removed
 
 
@@ -374,16 +399,11 @@ def _append_history(table_root: str, commit: int, manifest: list[int]) -> None:
 
 def snapshots(table_root: str) -> dict[int, list[int]]:
     """commit id -> the manifest (version list) as of that commit."""
-    path = os.path.join(table_root, _HISTORY)
     out: dict[int, list[int]] = {}
-    if os.path.exists(path):
-        with open(path) as f:
-            for line in f:
-                line = line.strip()
-                if not line:
-                    continue
-                commit, vs = line.split(":", 1)
-                out[int(commit)] = [int(v) for v in vs.split(",") if v]
+    for line in _read(os.path.join(table_root, _HISTORY)).splitlines():
+        if line.strip():
+            commit, vs = line.strip().split(":", 1)
+            out[int(commit)] = _ints(vs)
     return out
 
 

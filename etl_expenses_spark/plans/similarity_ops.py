@@ -1155,18 +1155,18 @@ def dedup_exact_jaccard_curation(spark, sf_dir):
 
 def _curation_state(spark, docs, sf_dir):
     """The stored curation state of dedup_incremental_apss as a REAL
-    WAP-published parquet artifact (VERDICT r12 #2): two tables under a
-    persistent per-tier root — `sets` (doc_id → shingle-fingerprint set)
-    and `star` (corpus cluster-map edges) — plus a corpus fingerprint
+    WAP-published parquet artifact: two tables under a persistent
+    per-tier root — `sets` (doc_id → shingle-fingerprint set) and `star`
+    (corpus cluster-map edges) — plus a corpus fingerprint
     marker written LAST as the commit point. Every call first validates
     the fingerprint (one cheap xxhash64 bit_xor scan of the documents
     table) and then READS THE PUBLISHED TABLES BACK; a cold call builds
     and publishes first, then reads back the very same tables. Cold and
     warm paths therefore execute the identical read-from-table plan —
     the bench number and the scaling number measure the same thing, and
-    the "production stored state" story is literally true (replacing the
-    r12 module-level session cache, whose warm path never touched disk).
-    Torn builds self-heal: the fingerprint is absent/stale until both
+    the "production stored state" story is literally true (a session
+    cache's warm path would never touch disk). Torn builds self-heal: the
+    fingerprint (written with ``atomic_write``) is absent/stale until both
     publishes land, so the next call rebuilds; publish_replace keeps the
     artifact one-version-current and vacuum bounds disk."""
     import os
@@ -1177,6 +1177,7 @@ def _curation_state(spark, docs, sf_dir):
     )
     from etl_expenses_spark.operators.dedup import connected_components
     from etl_expenses_spark.operators.wap import (
+        atomic_write,
         publish_replace,
         read_published,
         vacuum,
@@ -1219,10 +1220,7 @@ def _curation_state(spark, docs, sf_dir):
         F.col("id").alias("src"), F.col("cluster_id").alias("dst")
     )
     publish_replace(spark, star, star_root)
-    tmp = marker + ".tmp"
-    with open(tmp, "w") as f:
-        f.write(fingerprint)
-    os.replace(tmp, marker)
+    atomic_write(marker, fingerprint)
     for t in (sets_root, star_root):
         vacuum(t)
     return _read_back()
@@ -1259,8 +1257,8 @@ def dedup_incremental_apss(spark, sf_dir):
     WAP-published parquet artifact (_curation_state) built once per corpus
     fingerprint and READ BACK like any warehouse table — a cold run
     publishes then reads the same tables a warm run reads, so bench and
-    scaling measure one honest path (VERDICT r12 #2). Oracle = the full
-    recomputation over base∪delta — the same maintain==recompute contract
+    scaling measure one honest path. Oracle = the full recomputation
+    over base∪delta — the same maintain==recompute contract
     as dedup_incremental_batch and ivm_lsh_index_cdc, here with a fully
     SQL-expressible oracle."""
     from pyspark.sql import Window as W
@@ -1280,7 +1278,7 @@ def dedup_incremental_apss(spark, sf_dir):
     # every arriving delta (re-deriving them per query would be as absurd
     # as retraining an IVF coarse quantizer per search). _curation_state
     # fingerprint-validates and reads the published tables; cold and warm
-    # paths execute the same read-from-table plan (VERDICT r12 #2).
+    # paths execute the same read-from-table plan.
     sets_all, star = _curation_state(spark, docs, sf_dir)
     # one scan of each published table per build: the star feeds every
     # BSP round of the CC fold and the sets feed both probe sides, so

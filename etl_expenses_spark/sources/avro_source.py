@@ -12,10 +12,12 @@ Scale shape: one input partition per file — the standard file-source
 parallelism contract (a 100 TB Avro lake is many files; each task decodes
 only its own). Schema is inferred once, driver-side, from the FIRST file's
 header — O(header) bytes, no datum decode. The writer emits one container
-file per task partition with the task's partitionId in the name, so
-speculative/retried tasks overwrite their own output idempotently rather
-than duplicating rows (write-once-per-partition, the same contract as
-Spark's file commit protocol at this storage layer).
+file per task partition, ``part-<job>-<partitionId>.avro``, through the
+staged job commit of sources/jsonl_sink.py: tasks stage under
+``_staging``, and the job commit renames only the delivered attempts'
+files into place (and, on overwrite, removes the old parts first), so a
+failed job leaves the target as it was and a retried task never
+duplicates rows.
 
 Type mapping (both directions):
     long<->bigint   int<->int       double<->double   float<->float
@@ -40,10 +42,10 @@ from pyspark.sql.datasource import (
     GreaterThan,
     InputPartition,
     LessThan,
-    WriterCommitMessage,
 )
 
 from etl_expenses_spark.operators.avrocodec import read_avro, write_avro
+from etl_expenses_spark.sources.jsonl_sink import StagedFile, StagedWriter
 
 _EPOCH_DATE = datetime.date(1970, 1, 1)
 _EPOCH_TS = datetime.datetime(1970, 1, 1)
@@ -80,11 +82,11 @@ def _files(path: str) -> list[str]:
         return [path]
     if not os.path.isdir(path):  # first write into a fresh target
         return []
-    return sorted(
-        os.path.join(path, f)
-        for f in os.listdir(path)
-        if f.endswith(".avro") and not f.startswith(("_", "."))
-    )
+    return sorted(os.path.join(path, f) for f in os.listdir(path) if _is_part(f))
+
+
+def _is_part(f: str) -> bool:
+    return f.endswith(".avro") and not f.startswith(("_", "."))
 
 
 class _FilePartition(InputPartition):
@@ -220,21 +222,12 @@ class AvroStreamReader(DataSourceStreamReader):
         pass
 
 
-class _WroteFile(WriterCommitMessage):
-    def __init__(self, path: str, rows: int):
-        self.path, self.rows = path, rows
-
-
-class AvroWriter(DataSourceWriter):
-    def __init__(self, options, spark_schema):
-        import uuid
-
-        self.path = options["path"]
+class AvroWriter(StagedWriter, DataSourceWriter):
+    def __init__(self, options, spark_schema, overwrite: bool = False):
+        super().__init__(options)
         self.codec = options.get("codec", "deflate")
         self.spark_schema = spark_schema
-        # one id per write JOB (driver-side): append jobs never collide,
-        # while a retried task within the job rewrites its own file
-        self.job_id = uuid.uuid4().hex[:12]
+        self.overwrite = overwrite
 
     def _avro_schema(self) -> dict:
         fields = []
@@ -259,7 +252,7 @@ class AvroWriter(DataSourceWriter):
             )
         return {"type": "record", "name": "row", "fields": fields}
 
-    def write(self, iterator) -> _WroteFile:
+    def write(self, iterator) -> StagedFile:
         from pyspark import TaskContext
 
         schema = self._avro_schema()
@@ -282,27 +275,26 @@ class AvroWriter(DataSourceWriter):
                     v = bytes(v)
                 rec[n] = v
             recs.append(rec)
+        staged = self._stage(".avro")
+        with open(staged, "wb") as f:
+            f.write(write_avro(recs, schema, codec=self.codec))
+        # the name is the job's and the partition's, so a retried attempt
+        # of the task stages the same final name
         pid = TaskContext.get().partitionId()
-        os.makedirs(self.path, exist_ok=True)
-        # temp-file + rename commit (r6 ADVICE): a concurrent reader listing
-        # the directory mid-write (or a speculative duplicate task attempt)
-        # must never observe a torn container. The dot-prefixed temp name is
-        # already excluded by _files; os.rename is atomic on POSIX and
-        # idempotent for retried task attempts (same final name, same bytes).
-        final = f"part-{self.job_id}-{pid:05d}.avro"
-        out = os.path.join(self.path, final)
-        tmp = os.path.join(self.path, f".{final}.tmp")
-        data = write_avro(recs, schema, codec=self.codec)
-        with open(tmp, "wb") as f:
-            f.write(data)
-        os.rename(tmp, out)
-        return _WroteFile(out, len(recs))
+        return StagedFile(staged, len(recs), f"part-{self.job_id}-{pid:05d}.avro")
 
-    def commit(self, messages):
-        pass
+    def commit(self, messages) -> None:
+        """Publish the job: on overwrite remove the old parts, then rename
+        each delivered file to its part name (sources/jsonl_sink.py). A
+        reader listing the directory never sees a torn container: files are
+        written under ``_staging``, which ``_files`` skips, and appear by
+        rename."""
+        self._commit_staged(
+            messages, [m.name for m in messages], _is_part if self.overwrite else None
+        )
 
-    def abort(self, messages):
-        pass
+    def abort(self, messages) -> None:
+        self._sweep(messages)
 
 
 class AvroDataSource(DataSource):
@@ -342,10 +334,7 @@ class AvroDataSource(DataSource):
         return AvroStreamReader(self.options, self._first_schema())
 
     def writer(self, schema, overwrite: bool) -> AvroWriter:
-        if overwrite:
-            for f in _files(self.options["path"]):
-                os.remove(f)
-        return AvroWriter(self.options, schema)
+        return AvroWriter(self.options, schema, overwrite)
 
 
 def register(spark) -> None:

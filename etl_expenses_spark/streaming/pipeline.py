@@ -27,9 +27,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from etl_expenses_spark.operators.wap import (
+    _last_epoch, _publish, _reread, atomic_write, read_json,
+)
 from etl_expenses_spark.streaming.state import (
     compact_set_union,
     compaction_target,
+    drain,
     epoch_dirs,
     epoch_log_sink,
     start_available_now,
@@ -296,22 +300,35 @@ def run_events_stream_to_wap(
     quarantines the batch without poisoning the table.
 
     Exactly-once composition: the streaming checkpoint guarantees each
-    input file feeds exactly one successful foreachBatch epoch; WAP
-    guarantees that epoch becomes exactly one atomically-visible version.
-    A crash between them replays the epoch into a NEW version — so batches
-    must be idempotent at read time (dedup on event_id below) or the
-    replayed version must be vacuumed; the restart test covers the clean
-    path."""
-    from etl_expenses_spark.operators.wap import publish_append
-
+    input file feeds exactly one successful foreachBatch epoch, and each
+    epoch becomes exactly one atomically visible version. After a crash
+    between the publish and the checkpoint's commit, Spark re-delivers the
+    epoch under the same id; the version it published records that id
+    (``v{N}/_EPOCH``, carried forward by compaction), so the replay is
+    skipped instead of published twice (Armbrust et al., *Structured
+    Streaming*, SIGMOD 2018). An epoch BELOW the table's last one means
+    the checkpoint was lost or reset, or a second stream writes the table;
+    skipping it would drop data silently, so the sink raises."""
     events = read_event_stream(spark, bronze_dir).withWatermark("ts", "1 hour").dropDuplicates(
         ["event_id"]
     )
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
+        last = _last_epoch(table_root)
+        if epoch_id < last:
+            raise RuntimeError(
+                f"stream->WAP: epoch {int(epoch_id)} < last published epoch {last} "
+                f"at {table_root}: checkpoint lost or reset, or a second stream"
+            )
+        if epoch_id == last:
+            drain(batch_df)  # a replay of a published epoch
+            return
         if batch_df.isEmpty():
             return
-        publish_append(spark, batch_df, table_root, audits=audits or [])
+        _publish(
+            table_root, batch_df.write.mode("overwrite").parquet,
+            _reread(spark, audits), epoch=epoch_id,
+        )
 
     start_available_now(events, sink, checkpoint_dir).awaitTermination()
 
@@ -942,11 +959,7 @@ _CMS_MANIFEST = "_COMPACTED"
 
 
 def _cms_manifest(state_path: str) -> dict | None:
-    man = os.path.join(state_path, _CMS_MANIFEST)
-    if not os.path.exists(man):
-        return None
-    with open(man) as f:
-        return json.load(f)
+    return read_json(os.path.join(state_path, _CMS_MANIFEST), None)
 
 
 def _cms_live_epochs(state_path: str) -> dict[int, str]:
@@ -1008,8 +1021,8 @@ def cms_compact(spark: SparkSession, state_path: str) -> int:
        Spark's file index), then rename it to a fresh NEGATIVE epoch id —
        still invisible, because readers ignore negatives the manifest
        doesn't list;
-    2. PUBLISH by atomically replacing the ``_COMPACTED`` manifest
-       (os.replace), which simultaneously reveals the folded dir and
+    2. PUBLISH by replacing the ``_COMPACTED`` manifest with
+       ``atomic_write``, which simultaneously reveals the folded dir and
        condemns every folded positive epoch;
     3. CLEAN UP the stale dirs (best-effort; a crash here leaves garbage
        that readers already ignore and the next compaction reaps).
@@ -1018,32 +1031,23 @@ def cms_compact(spark: SparkSession, state_path: str) -> int:
     manifest-swap commit on the epoch-log layout — the two compaction
     regimes side by side: set-semantics state folds in place
     (index_compact/lsh_compact), additive state swaps a manifest."""
-    man = _cms_manifest(state_path)
-    all_ids = epoch_dirs(state_path)
-    # reap garbage a previous crashed/cleaned compaction left behind
-    for i, d in list(all_ids.items()):
-        stale = (
-            (man is None and i < 0)
-            or (man is not None and i != man["compacted"] and i <= man["max_folded"])
-        )
-        if stale:
-            shutil.rmtree(d)
-            del all_ids[i]
     live = _cms_live_epochs(state_path)
+    # reap what a previous crashed/cleaned compaction left behind: every
+    # epoch dir a reader ignores
+    for i, d in epoch_dirs(state_path).items():
+        if i not in live:
+            shutil.rmtree(d)
     if len(live) <= 1:
         return 0
-    target = compaction_target(all_ids)
+    target = compaction_target(live)
     staging = os.path.join(state_path, f".compact_staging_{-target}")
     _cms_sum(spark, live.values()).write.mode("overwrite").parquet(staging)
     os.rename(staging, os.path.join(state_path, f"epoch={target}"))
-    new_man = {"compacted": target, "max_folded": max(max(live), (man or {}).get("max_folded", -1))}
-    tmp = os.path.join(state_path, _CMS_MANIFEST + ".tmp")
-    with open(tmp, "w") as f:
-        json.dump(new_man, f)
-    os.replace(tmp, os.path.join(state_path, _CMS_MANIFEST))
+    # every live id is above the old max_folded or is the old compacted id
+    atomic_write(os.path.join(state_path, _CMS_MANIFEST),
+                 json.dumps({"compacted": target, "max_folded": max(live)}))
     for d in live.values():
-        if d != os.path.join(state_path, f"epoch={target}"):
-            shutil.rmtree(d)
+        shutil.rmtree(d)
     return len(live)
 
 

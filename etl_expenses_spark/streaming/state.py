@@ -16,12 +16,13 @@ it.
                                  "state": "state-{epoch}.parquet"}
 
    Commit order: write the new state to its EPOCH-VERSIONED path, then
-   replace ``_meta.json`` atomically (tempfile + ``os.replace``), then
+   replace ``_meta.json`` with ``atomic_write`` (operators/wap.py), then
    garbage-collect stale states and ``._meta*`` temps a crash leaked. A
    crash between any two steps leaves the meta pointing at a complete
    prior state, so replaying the interrupted epoch re-folds from it and
    re-commits — never a lost state, never a double fold. A replayed
-   ``epoch == last_epoch`` is skipped (its commit completed). An epoch
+   ``epoch == last_epoch`` is not folded again (its commit completed);
+   ``drain`` still runs it, for a stateful upstream's sake. An epoch
    BELOW ``last_epoch`` can only mean the stream restarted against a lost
    or reset checkpoint (batch ids restart at 0); skipping it would drop
    every new batch with no error, so the sink fails fast instead.
@@ -41,11 +42,12 @@ import glob
 import json
 import os
 import shutil
-import tempfile
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
+
+from etl_expenses_spark.operators.wap import atomic_write, read_json
 
 
 def start_available_now(stream: DataFrame, sink, checkpoint_dir: str
@@ -60,15 +62,20 @@ def start_available_now(stream: DataFrame, sink, checkpoint_dir: str
     )
 
 
+def drain(batch_df: DataFrame) -> None:
+    """Run a replayed batch to the noop sink, writing nothing. A sink may
+    not just return on a replay: Spark checks that a stateful upstream
+    (dropDuplicates, windows) committed its state stores for every batch
+    and fails the query otherwise."""
+    batch_df.write.format("noop").mode("overwrite").save()
+
+
 # ---- 1. versioned-state ledger -------------------------------------------
 
 def read_meta(state_dir: str) -> dict:
     """The committed ledger; an empty one before the first commit."""
-    meta_path = os.path.join(state_dir, "_meta.json")
-    if not os.path.exists(meta_path):
-        return {"total": 0, "last_epoch": -1, "state": None}
-    with open(meta_path) as f:
-        return json.load(f)
+    return read_json(os.path.join(state_dir, "_meta.json"),
+                     {"total": 0, "last_epoch": -1, "state": None})
 
 
 def _state_df(spark: SparkSession, state_dir: str, meta: dict
@@ -95,19 +102,15 @@ def commit_state(state_dir: str, state: DataFrame, epoch_id: int,
     it, then reap stale versions and leaked temp metas."""
     name = f"state-{int(epoch_id)}.parquet"
     state.write.mode("overwrite").parquet(os.path.join(state_dir, name))
-    fd, tmp = tempfile.mkstemp(dir=state_dir, prefix="._meta")
-    with os.fdopen(fd, "w") as f:
-        json.dump({"total": total, "last_epoch": int(epoch_id),
-                   "state": name}, f)
-    # through the os module, so a fail-point on os.replace tears it
-    os.replace(tmp, os.path.join(state_dir, "_meta.json"))
+    atomic_write(os.path.join(state_dir, "_meta.json"), json.dumps(
+        {"total": total, "last_epoch": int(epoch_id), "state": name}))
     for entry in os.listdir(state_dir):
         path = os.path.join(state_dir, entry)
         if entry != name and entry.startswith("state-"):
             shutil.rmtree(path, ignore_errors=True)
         elif entry.startswith("._meta"):
-            # a crash between mkstemp and os.replace leaks the temp; it is
-            # dead once any later commit lands
+            # a crash inside atomic_write leaks the temp; it is dead once
+            # any later commit lands
             try:
                 os.unlink(path)
             except OSError:
@@ -128,7 +131,8 @@ def ledger_sink(
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
         meta = read_meta(state_dir)
         if epoch_id == meta["last_epoch"]:
-            return  # replay of the one batch whose commit completed
+            drain(batch_df)  # replay of the one batch whose commit completed
+            return
         if epoch_id < meta["last_epoch"]:
             raise RuntimeError(
                 f"{who}: epoch {int(epoch_id)} < committed last_epoch "

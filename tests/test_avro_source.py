@@ -67,6 +67,39 @@ def test_one_file_per_partition_and_overwrite(avro_spark, tmp_path):
     assert spark.read.format("etl_avro").load(target).count() == 10
 
 
+@pytest.mark.parametrize("mode", ["overwrite", "append"])
+def test_failed_job_leaves_target_untouched(avro_spark, tmp_path, mode):
+    """A 4-task write whose task 3 fails after the other three finished
+    publishes nothing: the job commit, not each task, makes files visible,
+    and overwrite removes the old parts only in that commit."""
+    import time
+
+    spark = avro_spark
+    target = str(tmp_path / "t")
+    ddl = "id bigint, s string"
+    spark.range(10).selectExpr("id", "CAST(id AS STRING) AS s").write.format(
+        "etl_avro"
+    ).mode("overwrite").save(target)
+
+    def fail_late(batches):
+        from pyspark import TaskContext
+
+        if TaskContext.get().partitionId() == 3:
+            time.sleep(5)  # let tasks 0-2 write their files first
+            raise RuntimeError("injected late task failure")
+        yield from batches
+
+    df = spark.range(0, 100, 1, 4).selectExpr("id", "CAST(id AS STRING) AS s")
+    with pytest.raises(Exception, match="injected late task failure"):
+        df.mapInPandas(fail_late, ddl).write.format("etl_avro").mode(mode).save(
+            target
+        )
+    assert spark.read.format("etl_avro").load(target).count() == 10
+    assert sorted(os.listdir(target)) == sorted(
+        f for f in os.listdir(target) if f.endswith(".avro")
+    )  # no _staging dir, no temp file
+
+
 def test_schema_inference_matches_first_header(avro_spark, tmp_path):
     spark = avro_spark
     target = str(tmp_path / "t")

@@ -447,6 +447,34 @@ def test_stream_to_wap_publishes_atomic_versions(spark, dirs):
     assert read_published(spark, table_root).count() == 1000
 
 
+def test_stream_to_wap_replayed_epoch_publishes_once(spark, dirs, monkeypatch):
+    """A crash after an epoch's publish but before the checkpoint commits
+    it: the restart re-delivers the epoch under the same id, and the sink
+    recognises it from the epoch the published version recorded instead
+    of publishing a second copy."""
+    from etl_expenses_spark.operators import wap
+    from etl_expenses_spark.streaming.pipeline import run_events_stream_to_wap
+
+    bronze, gold, ckpt, _ = dirs
+    _write_bronze(spark, bronze, with_dupes=True)
+    real = wap._append_history
+
+    def crash_after_first_publish(*args):
+        real(*args)
+        monkeypatch.setattr(wap, "_append_history", real)
+        raise RuntimeError("injected crash after publish")
+
+    monkeypatch.setattr(wap, "_append_history", crash_after_first_publish)
+    with pytest.raises(Exception, match="injected crash after publish"):
+        run_events_stream_to_wap(spark, str(bronze), str(gold), str(ckpt))
+    assert len(wap.versions(str(gold))) == 1
+
+    run_events_stream_to_wap(spark, str(bronze), str(gold), str(ckpt))
+    published = wap.read_published(spark, str(gold))
+    assert published.count() == 1000
+    assert published.select("event_id").distinct().count() == 1000
+
+
 def test_stream_upsert_maintains_latest_state_per_user(spark, dirs):
     """foreachBatch upsert sink: gold holds exactly one CURRENT row per
     user (latest ts, event_id tiebreak), converges across micro-batches,

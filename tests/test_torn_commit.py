@@ -147,6 +147,50 @@ def test_mg_sink_recovers_from_torn_commit(spark, tmp_path):
     assert sum(counts.values()) == 3000
 
 
+def test_mg_sink_replay_after_commit_with_stateful_upstream(
+    spark, tmp_path, monkeypatch
+):
+    """A crash after the ledger commit but before the checkpoint commits the
+    epoch: the restart re-delivers it and the sink skips the fold. Under a
+    stateful upstream (watermark + dropDuplicates) the skipped batch must
+    still run, or Spark's state-store commit check fails every restart."""
+    from etl_expenses_spark.streaming import state as state_mod
+    from etl_expenses_spark.streaming.heavyhitters import mg_state_sink
+
+    ev = spark.range(0, 2000).select(
+        F.col("id").alias("event_id"),
+        (F.col("id") % 37).alias("user_id"),
+        F.timestamp_seconds(F.lit(1_700_000_000) + F.col("id")).alias("ts"),
+    )
+    bronze, state, ckpt = (str(tmp_path / d) for d in ("bronze", "state", "ckpt"))
+    ev.repartition(2).write.parquet(bronze)
+
+    def run():
+        stream = (
+            spark.readStream.schema("event_id long, user_id long, ts timestamp")
+            .parquet(bronze)
+            .withWatermark("ts", "1 hour")
+            .dropDuplicates(["event_id"])
+        )
+        mg_state_sink(stream, state, ckpt).awaitTermination()
+
+    real = state_mod.commit_state
+
+    def crash_after_commit(*args):
+        real(*args)
+        monkeypatch.setattr(state_mod, "commit_state", real)
+        raise RuntimeError("injected crash after ledger commit")
+
+    monkeypatch.setattr(state_mod, "commit_state", crash_after_commit)
+    with pytest.raises(Exception, match="injected crash after ledger commit"):
+        run()
+    assert _meta(state)["last_epoch"] == 0
+
+    run()
+    meta = _meta(state)
+    assert meta["total"] == 2000  # epoch 0 folded once, not twice
+
+
 def test_ivm_sink_recovers_from_torn_commit(spark, tmp_path):
     from decimal import Decimal
 

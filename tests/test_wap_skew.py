@@ -444,6 +444,72 @@ def test_wap_read_as_of_snapshots(spark, tmp_path):
     assert {r.id for r in read_as_of(spark, root, c3).collect()} == set(range(40))
 
 
+def test_wap_observed_publish_keeps_its_snapshot(spark, tmp_path):
+    """An observed-audit publish writes its snapshot line like every other
+    commit, so time travel to it survives a later compaction."""
+    from etl_expenses_spark.operators.wap import (
+        compact_published,
+        publish_append,
+        publish_append_observed,
+        read_as_of,
+        snapshots,
+    )
+
+    root = str(tmp_path / "t")
+    d = lambda lo, hi: spark.range(lo, hi).selectExpr("id", "id * 2 AS v")
+    c1 = publish_append(spark, d(0, 10), root)
+    c2 = publish_append_observed(
+        spark, d(10, 30), root, [("n", F.count(F.lit(1)), lambda n: n == 20)]
+    )
+    c3 = compact_published(spark, root)
+
+    assert set(snapshots(root)) == {c1, c2, c3}
+    assert {r.id for r in read_as_of(spark, root, c2).collect()} == set(range(30))
+    assert {r.id for r in read_as_of(spark, root, c3).collect()} == set(range(30))
+
+
+def test_wap_torn_manifest_swap_keeps_table_and_vacuum_reaps_temp(
+    spark, tmp_path, monkeypatch
+):
+    """A crash inside the manifest swap (atomic_write's os.replace) leaves
+    the table at its previous version and leaks a ``._CURRENT*`` temp,
+    which vacuum reaps; the next publish still lands."""
+    import os
+
+    from etl_expenses_spark.operators.wap import (
+        publish_append,
+        read_published,
+        vacuum,
+        versions,
+    )
+
+    root = str(tmp_path / "t")
+    publish_append(spark, spark.range(0, 10), root)
+    real = os.replace
+
+    def tear(src, dst, *a, **kw):
+        if os.path.basename(str(dst)) == "_CURRENT":
+            raise OSError("torn manifest swap (injected)")
+        return real(src, dst, *a, **kw)
+
+    monkeypatch.setattr(os, "replace", tear)
+    with pytest.raises(OSError, match="torn manifest swap"):
+        publish_append(spark, spark.range(10, 20), root)
+    monkeypatch.setattr(os, "replace", real)
+
+    assert versions(root) == [1]
+    assert read_published(spark, root).count() == 10
+    leaked = [f for f in os.listdir(root) if f.startswith("._CURRENT")]
+    assert leaked
+    assert set(leaked) <= {os.path.basename(p) for p in vacuum(root)}
+    assert not [f for f in os.listdir(root) if f.startswith("._CURRENT")]
+    # the unpublished v2 the torn commit renamed in does not block the next
+    # publish, and vacuum reaps it once the manifest has passed it
+    assert publish_append(spark, spark.range(10, 20), root) == 3
+    assert read_published(spark, root).count() == 20
+    assert "v2" in {os.path.basename(p) for p in vacuum(root)}
+
+
 def test_wap_publish_replace_snapshots(spark, tmp_path):
     """publish_replace swaps the CURRENT manifest to the new version only,
     while the snapshot log keeps every prior state readable — merge makes
