@@ -8,12 +8,19 @@ registry clears the PREVIOUS query's caches at the start of each build —
 a long sequential session (the driver runs 50+ queries in one JVM) holds
 at most one query's cached blocks instead of accumulating until LRU
 eviction pressure.
+
+The BSP helpers (``bsp_checkpoint``, ``bsp_iterate``) materialize loop
+state once per round and hand the next round a stats-reset leaf. They do
+not size that state: AQE's post-shuffle coalescing (on in ``session.py``
+and by default in a bare session) never cuts a shuffle read into
+partitions below ``coalescePartitions.minPartitionSize`` (1 MB), so a
+KB-scale state runs its rounds at one task and a large one keeps a
+data-sized width.
 """
 
 from __future__ import annotations
 
 from collections.abc import Callable
-from contextlib import contextmanager as _contextmanager
 
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
@@ -40,21 +47,8 @@ def clear_tracked_caches() -> None:
     BSP_RUNS.clear()
 
 
-# Adaptive BSP-state sizing: a checkpointed state keeps the FIXED
-# partition count of the plan that produced it (shuffle.partitions-ish)
-# even when it has collapsed to a few hundred rows, so every later round
-# schedules a full width of no-op tasks (profiled: the curation funnel's CC
-# rounds ran 33-task localCheckpoint jobs with ZERO task time, ~0.24 s of
-# pure scheduling per round). A sized leaf is coalesced (narrow, no
-# shuffle) down to ceil(rows / _BSP_ROWS_PER_PARTITION) partitions —
-# identity whenever the state is big enough to deserve its width, so the
-# 100 TB path is untouched.
-_BSP_ROWS_PER_PARTITION = 65536
-
-
-def _rebuild_leaf(ck: DataFrame, rows: int | None = None) -> DataFrame:
-    """Fresh-stats leaf over an already-checkpointed DataFrame's RDD blocks,
-    coalesced to match ``rows`` when given (see above).
+def _rebuild_leaf(ck: DataFrame) -> DataFrame:
+    """Fresh-stats leaf over an already-checkpointed DataFrame's RDD blocks.
 
     ``Dataset.localCheckpoint`` copies the origin plan's stats estimate
     onto the new LogicalRDD leaf. In an iterative loop whose per-round
@@ -88,28 +82,17 @@ def _rebuild_leaf(ck: DataFrame, rows: int | None = None) -> DataFrame:
             "and bound the loop's round count, or run on a classic session."
         )
     jdf = ck._jdf
-    jrdd = jdf.javaRDD()
-    if rows is not None:
-        cur = jrdd.getNumPartitions()
-        want = max(1, min(cur, -(-rows // _BSP_ROWS_PER_PARTITION)))
-        if want < cur:
-            jrdd = jrdd.coalesce(want)
     return DataFrame(
-        spark._jsparkSession.createDataFrame(jrdd, jdf.schema()),
+        spark._jsparkSession.createDataFrame(jdf.javaRDD(), jdf.schema()),
         spark,
     )
 
 
-def bsp_checkpoint(df: DataFrame, *, sized: bool = False) -> DataFrame:
+def bsp_checkpoint(df: DataFrame) -> DataFrame:
     """Eager localCheckpoint behind a stats-reset leaf (see _rebuild_leaf).
-    ``sized`` counts the rows as an observed metric of the checkpoint's own
-    job and coalesces the leaf to them — for loop-invariant relations (edge
-    lists, adjacency) whose width every round's joins inherit."""
-    if not sized:
-        return _rebuild_leaf(df.localCheckpoint())
-    obs = Observation()
-    ck = df.observe(obs, F.count(F.lit(1)).alias("rows")).localCheckpoint()
-    return _rebuild_leaf(ck, int(obs.get["rows"]))
+    The leaf keeps the checkpoint's partitions, which AQE sized when it
+    coalesced the shuffle that produced them."""
+    return _rebuild_leaf(df.localCheckpoint())
 
 
 # Telemetry of every bsp_iterate call since the last clear_tracked_caches:
@@ -124,7 +107,6 @@ def bsp_iterate(
     *,
     max_rounds: int,
     exhausted: str | None,
-    size_leaf: bool = False,
 ) -> DataFrame:
     """Run a bulk-synchronous loop to its fixed point (the Pregel superstep
     loop with a vote to halt, Malewicz et al., SIGMOD 2010).
@@ -134,9 +116,8 @@ def bsp_iterate(
     ``count_if(changed)`` and ``count(*)`` as observed metrics, so the
     convergence test costs no extra driver round-trip: ``Observation.get``
     only waits for the listener. The checkpoint becomes a stats-reset leaf
-    (sized to the counted rows when ``size_leaf``) and is passed, flag
-    column included, to the next step. The loop returns that leaf as soon
-    as no row changed.
+    and is passed, flag column included, to the next step. The loop returns
+    that leaf as soon as no row changed.
 
     If ``max_rounds`` run out while rows still change, it raises
     ``RuntimeError(exhausted)``: the state is not a fixed point, so
@@ -158,7 +139,7 @@ def bsp_iterate(
         )
         got = obs.get
         rows, n = int(got["rows"]), int(got["n"])
-        state = _rebuild_leaf(ck, rows if size_leaf else None)
+        state = _rebuild_leaf(ck)
         run["rounds"] += 1
         run["rows"].append(rows)
         run["changed"].append(n)
@@ -167,37 +148,3 @@ def bsp_iterate(
     if exhausted is not None:
         raise RuntimeError(exhausted)
     return state
-
-
-@_contextmanager
-def small_state_rounds(spark, enabled: bool = True):
-    """Scope AQE's post-shuffle coalescing to SIZE-based targeting for a
-    BSP loop whose state is observed tiny.
-
-    AQE's default ``coalescePartitions.parallelismFirst=true`` floors the
-    coalesced partition count at the session's default parallelism, so a
-    loop whose whole state is a few hundred rows still runs every round's
-    shuffle at full session width — profiled on the curation funnel's CC
-    loop as 33-task jobs with ZERO task time, ~0.25 s of pure scheduling
-    each. Inside this scope AQE targets ``advisoryPartitionSizeInBytes``
-    instead, which collapses KB-scale shuffles to one task. Callers must
-    enable it ONLY when the loop's per-round work is proportional to an
-    observed-small state (per-row cost ~constant); compute-dense rounds
-    (k-core H-steps, truss wedge expansion) keep the default. The conf is
-    restored on exit, so surrounding plan execution is untouched."""
-    key = "spark.sql.adaptive.coalescePartitions.parallelismFirst"
-    if not enabled:
-        yield
-        return
-    try:
-        old = spark.conf.get(key)
-    except Exception:
-        old = None
-    spark.conf.set(key, "false")
-    try:
-        yield
-    finally:
-        if old is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, old)

@@ -21,12 +21,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from etl_expenses_spark.caching import (
-    bsp_checkpoint,
-    bsp_iterate,
-    small_state_rounds,
-    track,
-)
+from etl_expenses_spark.caching import bsp_checkpoint, bsp_iterate, track
 from etl_expenses_spark.functions.text import tokens
 from etl_expenses_spark.scaleout import fan_out
 
@@ -62,12 +57,6 @@ def shingles_of_tokens(t: Column, k: int = 3) -> Column:
         )
     shingled = F.filter(acc, lambda x: x.isNotNull())
     return F.when(n >= k, shingled).otherwise(F.array(F.concat_ws(" ", t)))
-
-
-def token_shingles(col: Column | str, k: int = 3) -> Column:
-    """k-token shingles of a text column (convenience form — prefer
-    materializing tokens first in multi-stage plans)."""
-    return shingles_of_tokens(tokens(col), k)
 
 
 def _salted_hash(i: int):
@@ -433,57 +422,43 @@ def connected_components(
     raises ``RuntimeError`` rather than returning labels that have not
     converged.
     """
-    # sized: pair batches are often tiny relative to the session width,
-    # and every round's join inherits this leaf's task count
     sym = bsp_checkpoint(
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
         .union(edges.select(F.col(dst).alias("u"), F.col(src).alias("v")))
-        .distinct(),
-        sized=True,
+        .distinct()
     )
-    # Min-label rounds do O(|edges|) join+min work: when the whole edge
-    # relation is small enough that its sized leaf is one partition
-    # (≤ caching._BSP_ROWS_PER_PARTITION rows), every round's shuffles
-    # should run at ONE task, not the session width, so AQE's
-    # parallelismFirst floor is scoped off for the loop (restored on exit).
-    # At real graph scale the scope never activates.
-    with small_state_rounds(
-        sym.sparkSession, enabled=sym.rdd.getNumPartitions() <= 1
-    ):
-        # fused round 1: with identity labels, each node's neighbor-min is
-        # just min(neighbor ids) — one groupBy over sym, no join needed yet
-        labels = bsp_checkpoint(
-            sym.groupBy("u")
-            .agg(F.min("v").alias("mv"))
-            .select(F.col("u").alias("id"), F.least("u", "mv").alias("lbl")),
-            sized=True,
+    # fused round 1: with identity labels, each node's neighbor-min is
+    # just min(neighbor ids) — one groupBy over sym, no join needed yet
+    labels = bsp_checkpoint(
+        sym.groupBy("u")
+        .agg(F.min("v").alias("mv"))
+        .select(F.col("u").alias("id"), F.least("u", "mv").alias("lbl"))
+    )
+
+    def step(labels: DataFrame, _round: int) -> DataFrame:
+        nbr_min = (
+            sym.join(labels, sym["v"] == labels["id"])
+            .groupBy("u")
+            .agg(F.min("lbl").alias("nbr_min"))
+        )
+        new_lbl = F.least(
+            labels["lbl"], F.coalesce(F.col("nbr_min"), labels["lbl"])
+        )
+        return labels.join(nbr_min, labels["id"] == nbr_min["u"], "left").select(
+            labels["id"],
+            new_lbl.alias("lbl"),
+            (new_lbl < labels["lbl"]).alias("changed"),
         )
 
-        def step(labels: DataFrame, _round: int) -> DataFrame:
-            nbr_min = (
-                sym.join(labels, sym["v"] == labels["id"])
-                .groupBy("u")
-                .agg(F.min("lbl").alias("nbr_min"))
-            )
-            new_lbl = F.least(
-                labels["lbl"], F.coalesce(F.col("nbr_min"), labels["lbl"])
-            )
-            return labels.join(nbr_min, labels["id"] == nbr_min["u"], "left").select(
-                labels["id"],
-                new_lbl.alias("lbl"),
-                (new_lbl < labels["lbl"]).alias("changed"),
-            )
-
-        labels = bsp_iterate(
-            labels,
-            step,
-            max_rounds=max_iters - 1,
-            exhausted=f"connected_components: labels still changing after "
-            f"max_iters={max_iters} rounds — some component is wider than "
-            "the budget, so its labels are not its minimum yet. Raise "
-            "max_iters, or use connected_components_star for long chains.",
-            size_leaf=True,
-        )
+    labels = bsp_iterate(
+        labels,
+        step,
+        max_rounds=max_iters - 1,
+        exhausted=f"connected_components: labels still changing after "
+        f"max_iters={max_iters} rounds — some component is wider than "
+        "the budget, so its labels are not its minimum yet. Raise "
+        "max_iters, or use connected_components_star for long chains.",
+    )
     return labels.select("id", F.col("lbl").alias("cluster_id"))
 
 

@@ -250,12 +250,6 @@ def kcore_decomposition(
     # keeps the per-round join from planning around sym's copied stats.
     # Cost: one Row-conversion pass per round's sym scan, ~+0.8 s at
     # sf0.1 — the right trade for the tier this loop is built for.
-    # Leaf SIZING (sized / size_leaf) was A/B-measured here and on ktruss —
-    # kcore a wash (4.3-4.75 s full-width vs 4.52 s sized medians), ktruss
-    # a consistent ~0.3 s LOSS: these loops' per-round work (H-step
-    # collect_list / wedge expansion) is real compute that a narrowed leaf
-    # serializes. Full-width checkpoints stay; sizing is reserved for
-    # trivial-per-row loops (connected_components).
     sym = bsp_checkpoint(sym)
     est = (
         sym.groupBy("node")

@@ -230,23 +230,6 @@ def audit_unique_key(cols: list[str]) -> AuditFn:
     return check
 
 
-def audit_metrics_single_pass(
-    rules: list[tuple[str, "Column", Callable[[object], bool]]],
-) -> AuditFn:
-    """All aggregate invariants in ONE scan of the staged data.
-
-    ``rules`` = (name, aggregate Column, predicate over its value). The
-    per-rule audits above each rescan the staged batch (3 rules = 3 full
-    scans — fine at MB, prohibitive at 100 TB); this folds every metric
-    into a single ``agg`` so the audit costs one scan total.
-    """
-
-    def check(df: DataFrame) -> str | None:
-        return _rule_failure(rules, df.agg(*[c.alias(n) for n, c, _ in rules]).first())
-
-    return check
-
-
 def _rule_failure(rules, values) -> str | None:
     for n, _, pred in rules:
         if not pred(values[n]):

@@ -352,13 +352,11 @@ def pagerank_copurchase(spark, sf_dir):
     collected per-order baskets — one shuffle keyed by order, in-basket
     pairs expanded JVM-side from the array (bounded by basket size, never
     |parts|²; replaces a sort-merge self-join + DISTINCT, two exchanges
-    cheaper) — then cached PRE-PARTITIONED on the source key, so every
-    iteration's probe join reuses the cached partitioning (InMemoryRelation
-    preserves outputPartitioning; only the node-sized contribution relation
-    exchanges per round). The rank relation carries outdeg with it, so no
-    per-iteration (rank ⋈ degree) join exists at all. This is the standard
-    BSP PageRank layout (Pregel-on-dataframes) with the per-round constant
-    factors measured down."""
+    cheaper) — then checkpointed once, keyed on the source node, with AQE
+    sizing the keyed shuffle. The checkpoint leaf does not expose that key
+    layout to the planner, so each round's probe join re-shuffles the edges
+    (KB-scale at sf0.1). The rank relation carries outdeg with it, so no
+    per-iteration (rank ⋈ degree) join exists at all."""
     # r13: same-key fan-out as _copurchase_edges — no added exchange, the
     # partial collect_set leaves the single-task scan (guide §2.4/§2.5).
     li = fan_out(
@@ -387,23 +385,11 @@ def pagerank_copurchase(spark, sf_dir):
     )
     from etl_expenses_spark.caching import bsp_checkpoint
 
-    # r14 (guide §2 scale-adaptive partitioning): the co-purchase edge
-    # relation is NODE-community sized (7.1k rows at sf0.1), yet it was
-    # cached at the session's full shuffle width — so every round's
-    # probe-join stage scheduled 32 tasks whose per-task FIXED cost
-    # (codegen compile lock-wait + task setup, profiled ~550 ms run vs
-    # ~190 ms cpu with zero shuffle read and zero GC) dwarfed the per-task
-    # work. A sized checkpoint materializes the same relation once and
-    # coalesces the leaf to ceil(rows/65536) partitions — identity at real
-    # graph scale, where the keyed repartition below still gives each
-    # round's join a reusable layout.
-    n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    edges = bsp_checkpoint(edges.repartition(n_shuffle, "s"), sized=True)
+    edges = bsp_checkpoint(edges.repartition("s"))
     deg = bsp_checkpoint(
         edges.groupBy("s")
         .agg(F.count(F.lit(1)).alias("deg"))
-        .withColumnRenamed("s", "node"),
-        sized=True,
+        .withColumnRenamed("s", "node")
     )
     r = deg.select("node", "deg", F.lit(1000000).cast("long").alias("r"))
     for _ in range(3):

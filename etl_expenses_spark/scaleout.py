@@ -28,21 +28,23 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-# Planned-partition-count cache (r14, VERDICT r13 #6): probing a frame's
-# partition count forces a physical-planning pass of its plan at build
-# time, on EVERY invocation — pure driver overhead that grows with plan
-# complexity. For the scan-derived frames every call site passes, the
-# count is fixed by the logical plan (file listing included), the split
-# size and the session's width, so the SECOND and later builds of the same query can reuse the first build's
-# probe. Keyed by the canonicalized plan's semanticHash (JVM-side, no
-# physical planning) plus every setting the count depends on besides the
-# plan: the split-size and shuffle-width confs and the default
-# parallelism, so a conf change re-probes instead of aliasing.
-# Checkpointed/cached leaves hash per-instance, so they simply miss and
-# re-probe. Bounded: cleared wholesale if it ever grows past
-# _PROBE_CACHE_MAX (sessions here build a few hundred distinct plans at
-# most).
-_PROBE_CACHE: dict[tuple, int] = {}
+# Planned-partition-count cache: probing a frame's partition count forces
+# a physical-planning pass of its plan at build time, on EVERY invocation
+# — pure driver overhead that grows with plan complexity. For the
+# scan-derived frames every call site passes, the count is fixed by the
+# logical plan (file listing included), the split size and the session's
+# width, so the SECOND and later builds of the same query can reuse the
+# first build's probe. Keyed by the canonicalized plan's semanticHash
+# (JVM-side, no physical planning) plus every setting the count depends on
+# besides the plan: the split-size and shuffle-width confs and the default
+# parallelism, so a conf change re-probes instead of aliasing. The hash is
+# 32 bits, so each entry keeps its analyzed plan and a hit counts only
+# when that plan ``sameResult``s the probed one; a collision re-probes and
+# takes the entry over. Checkpointed/cached leaves hash per-instance, so
+# they simply miss and re-probe. Bounded: cleared wholesale if it ever
+# grows past _PROBE_CACHE_MAX (sessions here build a few hundred distinct
+# plans at most).
+_PROBE_CACHE: dict[tuple, tuple[object, int]] = {}
 _PROBE_CACHE_MAX = 1024
 _PROBE_CONFS = (
     "spark.sql.files.maxPartitionBytes",
@@ -63,18 +65,20 @@ def _planned_partitions(df: DataFrame) -> int:
         return df.rdd.getNumPartitions()
     qe = jdf.queryExecution()
     spark = df.sparkSession
+    plan = qe.analyzed()
     key = (
         spark.sparkContext.applicationId,
-        qe.analyzed().semanticHash(),
+        plan.semanticHash(),
         spark.sparkContext.defaultParallelism,
         *(spark.conf.get(k) for k in _PROBE_CONFS),
     )
-    n = _PROBE_CACHE.get(key)
-    if n is None:
-        n = qe.toRdd().getNumPartitions()
-        if len(_PROBE_CACHE) >= _PROBE_CACHE_MAX:
-            _PROBE_CACHE.clear()
-        _PROBE_CACHE[key] = n
+    hit = _PROBE_CACHE.get(key)
+    if hit is not None and hit[0].sameResult(plan):
+        return hit[1]
+    n = qe.toRdd().getNumPartitions()
+    if len(_PROBE_CACHE) >= _PROBE_CACHE_MAX:
+        _PROBE_CACHE.clear()
+    _PROBE_CACHE[key] = (plan, n)
     return n
 
 

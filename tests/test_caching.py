@@ -4,7 +4,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from etl_expenses_spark import caching
-from etl_expenses_spark.caching import bsp_iterate
+from etl_expenses_spark.caching import bsp_checkpoint, bsp_iterate
+from etl_expenses_spark.operators.dedup import connected_components
 
 
 def test_bsp_iterate_raises_converges_and_survives_long_chains(spark):
@@ -56,3 +57,29 @@ def test_bsp_iterate_raises_converges_and_survives_long_chains(spark):
 
     caching.clear_tracked_caches()
     assert caching.BSP_RUNS == []
+
+
+def test_small_bsp_state_checkpoints_to_one_partition(spark):
+    """KB-scale loop state runs at one task with no per-site sizing: AQE's
+    post-shuffle coalescing never cuts a shuffle read below its minimum
+    partition size, so a wide shuffle setting still checkpoints a small
+    edge set, and every CC round over it, into one partition."""
+    key = "spark.sql.shuffle.partitions"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "32")
+    try:
+        # 1000 four-node chains: 3000 edges, 1000 components
+        ids = spark.range(4000).filter(F.col("id") % 4 != 3)
+        edges = ids.select(F.col("id").alias("src"), (F.col("id") + 1).alias("dst"))
+        sym = bsp_checkpoint(
+            edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
+            .union(edges.select(F.col("dst").alias("u"), F.col("src").alias("v")))
+            .distinct()
+        )
+        assert sym.count() == 6000
+        assert sym.rdd.getNumPartitions() == 1
+        labels = connected_components(edges)
+        assert labels.rdd.getNumPartitions() == 1
+        assert labels.select("cluster_id").distinct().count() == 1000
+    finally:
+        spark.conf.set(key, old)

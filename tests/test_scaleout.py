@@ -60,6 +60,21 @@ def test_probe_cache_distinguishes_plans(spark):
     assert len(_PROBE_CACHE) == 2
 
 
+def test_probe_cache_confirms_hit_with_same_result(spark):
+    # the key holds a 32-bit semanticHash, so two plans can share an entry;
+    # a stored count may only answer for a plan that sameResults its own
+    three = spark.range(0, 100, 1, 3)
+    one = spark.range(0, 100, 1, 1)
+    scaleout._PROBE_CACHE.clear()
+    assert _planned_partitions(three) == 3
+    (stored,) = _PROBE_CACHE.values()
+    scaleout._PROBE_CACHE.clear()
+    assert _planned_partitions(one) == 1
+    (key,) = _PROBE_CACHE
+    _PROBE_CACHE[key] = stored  # a hash collision: three's entry under one's key
+    assert _planned_partitions(one) == 1
+
+
 def test_probe_matches_public_rdd_count(spark):
     # the JVM-internal toRdd count must agree with the public df.rdd count
     for parts in (1, 2, 5):
