@@ -11,12 +11,27 @@ DISTINCT keys into a Python set and skips already-loaded batches
   at 100 TB the right design is a date-partitioned gold table so the
   anti-join only scans the partitions the batch can overlap (pass
   ``target_pruned`` accordingly).
+
+An append is one staged write (``_append``): the fresh rows go once to
+``{gold}/_staging/<uuid>/``, which no reader lists (Spark skips
+``_``-prefixed paths); the appended count is summed from the staged parquet
+footers on the driver, with no count job and no ``observe()``; and each
+non-empty staged file is moved into gold with ``os.replace``. A crash
+before the moves leaves gold untouched. A crash between two moves leaves
+some of the batch's files published, each holding whole rows, so a re-run
+of the same batch appends exactly the missing keys.
 """
 
 from __future__ import annotations
 
+import glob
+import os
+import shutil
+import uuid
 from collections.abc import Sequence
+from contextlib import suppress
 
+import pyarrow.parquet as pq
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -40,8 +55,9 @@ def upsert(updates: DataFrame, target: DataFrame, keys: Sequence[str]) -> DataFr
     return updates.unionByName(keep)
 
 
-def read_gold(spark, target_path: str, **options) -> DataFrame | None:
+def read_gold(spark, target_path: str, schema=None, **options) -> DataFrame | None:
     """The parquet table at ``target_path``, or None when there is none yet.
+    A given ``schema`` is read as is, with no footer-inference job.
 
     Only a MISSING or EMPTY target means "first load": PATH_NOT_FOUND for
     an absent dir, UNABLE_TO_INFER_SCHEMA for a dir with no parquet files
@@ -49,8 +65,9 @@ def read_gold(spark, target_path: str, **options) -> DataFrame | None:
     problem, permissions surfaced as analysis) propagates — treating it as
     a first load would append the full batch and silently break the
     exactly-once J1-J4 contract."""
+    reader = spark.read.options(**options)
     try:
-        return spark.read.options(**options).parquet(target_path)
+        return (reader.schema(schema) if schema else reader).parquet(target_path)
     except AnalysisException as e:
         if e.getCondition() in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
             return None
@@ -66,23 +83,36 @@ def merge_append(
     """Append only not-yet-loaded rows of ``batch`` to the parquet table at
     ``target_path``. Returns the number of rows appended. Loading the same
     batch twice is a no-op (the idempotency property test in
-    tests/test_merge.py — the J1-J4 contract)."""
-    target = read_gold(batch.sparkSession, target_path)
+    tests/test_merge.py — the J1-J4 contract). Gold's key columns are read
+    with the batch's own key schema, so no job infers gold's footers."""
+    target = read_gold(batch.sparkSession, target_path, batch.select(*keys).schema)
     fresh = batch if target is None else new_rows(batch, target, keys)
     return _append(fresh, target_path, partition_by)
 
 
 def _append(fresh: DataFrame, target_path: str,
             partition_by: Sequence[str] | None) -> int:
-    fresh = fresh.cache()
-    n = fresh.count()
-    if n > 0:
-        writer = fresh.write.mode("append")
+    """Write ``fresh`` once to this call's stage, count it from the footers
+    and move its non-empty files into gold (module docstring). Whatever
+    happens, this call's stage is removed, and ``_staging`` too once no
+    other writer's stage is left in it."""
+    staged = os.path.join(target_path, "_staging", uuid.uuid4().hex)
+    try:
+        writer = fresh.write
         if partition_by:
             writer = writer.partitionBy(*partition_by)
-        writer.parquet(target_path)
-    fresh.unpersist()
-    return n
+        writer.parquet(staged)
+        files = glob.glob("**/*.parquet", root_dir=staged, recursive=True)
+        rows = {f: pq.read_metadata(os.path.join(staged, f)).num_rows for f in files}
+        for f in (f for f in files if rows[f]):
+            dst = os.path.join(target_path, f)
+            os.makedirs(os.path.dirname(dst), exist_ok=True)
+            os.replace(os.path.join(staged, f), dst)
+        return sum(rows.values())
+    finally:
+        shutil.rmtree(staged, ignore_errors=True)
+        with suppress(OSError):
+            os.rmdir(os.path.dirname(staged))
 
 
 # numeric widening lattice for safe automatic evolution: a column may move

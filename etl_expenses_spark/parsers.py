@@ -172,18 +172,23 @@ def tickets_to_items(binary_df: DataFrame) -> DataFrame:
     """binaryFile scan → item rows (the EP1 transform). mapInPandas: each
     Arrow batch of (path, content) yields item-row batches; per-ticket
     totals are then derived with a window — Spark-side, not in the parser
-    (`transform_data_pdf/lambda_function.py:123-126` did it in pandas)."""
+    (`transform_data_pdf/lambda_function.py:123-126` did it in pandas).
+
+    A ticket delivered twice in one scan (the same ``nro_ticket`` in two
+    files) keeps only the items of its first file by path, so neither the
+    totals nor a later item numbering count it twice. That filter is a
+    window on ``nro_ticket`` too, so it shares the totals' shuffle."""
+    schema = T.StructType([*TICKET_ITEM_SCHEMA.fields, T.StructField("doc", T.StringType())])
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf_batch in batches:
             rows: list[dict] = []
-            for content in pdf_batch["content"]:
-                rows.extend(parse_ticket_text(pdf_bytes_to_text(bytes(content))))
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in TICKET_ITEM_SCHEMA.fields]
-            )
+            for path, content in zip(pdf_batch["path"], pdf_batch["content"]):
+                items = parse_ticket_text(pdf_bytes_to_text(bytes(content)))
+                rows.extend(dict(item, doc=path) for item in items)
+            yield pd.DataFrame(rows, columns=schema.fieldNames())
 
-    items = binary_df.select("content").mapInPandas(gen, schema=TICKET_ITEM_SCHEMA)
+    items = binary_df.select("path", "content").mapInPandas(gen, schema=schema)
     from pyspark.sql.window import Window as W
 
     w = W.partitionBy("nro_ticket")
@@ -191,7 +196,10 @@ def tickets_to_items(binary_df: DataFrame) -> DataFrame:
         "descuento"
     ).cast("decimal(18,2)")
     return (
-        items.withColumn("total_ticket_bruto", bruto.cast("double"))
+        items.withColumn("first_doc", F.min("doc").over(w))
+        .filter(F.col("doc") == F.col("first_doc"))
+        .drop("doc", "first_doc")
+        .withColumn("total_ticket_bruto", bruto.cast("double"))
         .withColumn(
             "total_ticket_meli",
             (F.floor(bruto * F.lit(0.3) * 100) / 100).cast("double"),

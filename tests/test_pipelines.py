@@ -176,3 +176,100 @@ def test_read_excel_sheet_selection_and_errors(spark, tmp_path):
         read_xlsx(wb, sheet="otra")
     with _pytest.raises(ValueError, match="out of range"):
         read_xlsx(wb, sheet=5)
+
+
+def _ticket_pdf(nro: int = 778899) -> bytes:
+    return b"%PDF" + TICKET_TEXT.replace("778899", str(nro)).encode()
+
+
+def _jobs_in_group(spark, group: str, run) -> tuple[object, int]:
+    """``run()``'s result and the number of Spark jobs it started."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = run()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_ticket_delivered_twice_in_one_batch_loads_once(spark, tmpdirs):
+    """A byte-identical re-delivery under a new name in the SAME batch: the
+    key anti-join cannot catch it (gold does not hold the ticket yet), so
+    the parse keeps one document per nro_ticket before numbering items and
+    summing the gross total."""
+    bronze, gold = tmpdirs
+    (bronze / "t1.pdf").write_bytes(_ticket_pdf())
+    (bronze / "again_t1.pdf").write_bytes(_ticket_pdf())
+    assert run_ticket_pipeline(spark, str(bronze), str(gold / "carrefour_data")) == 3
+    rows = spark.read.parquet(str(gold / "carrefour_data")).collect()
+    assert sorted(r.item_no for r in rows) == [1, 2, 3]
+    assert [r.total_ticket_bruto for r in rows] == pytest.approx([5499.7] * 3)
+
+
+def test_replay_of_unchanged_bronze_runs_no_spark_job(spark, tmpdirs):
+    """Replay is a driver-side listing against the gold table's record of
+    loaded files: unchanged bronze appends 0 rows without one Spark job."""
+    bronze, gold = tmpdirs
+    for sub in ("tickets", "mp", "mails"):
+        (bronze / sub).mkdir()
+    (bronze / "tickets" / "t1.pdf").write_bytes(_ticket_pdf())
+    (bronze / "mp" / "settlement_2025-04-01_R100.csv").write_text(MP_CSV_EN)
+    doc = {"message_id": "m1", "date": "2025-04-26T17:09:43", "sender": "s",
+           "subject": "s", "html_body": MAIL_HTML, "raw_text": ""}
+    (bronze / "mails" / "m1.json").write_text(json.dumps(doc))
+    flows = [
+        (run_ticket_pipeline, "tickets", 3),
+        (run_mp_report_pipeline, "mp", 2),
+        (run_bank_mail_pipeline, "mails", 1),
+    ]
+    for run, sub, rows in flows:
+        src, dst = str(bronze / sub), str(gold / sub)
+        assert run(spark, src, dst) == rows
+        replayed, jobs = _jobs_in_group(spark, f"replay-{sub}", lambda: run(spark, src, dst))
+        assert (replayed, jobs) == (0, 0), sub
+        assert spark.read.parquet(dst).count() == rows
+
+
+def test_bronze_file_rewritten_in_place_is_read_again(spark, tmpdirs):
+    """A file whose size or mtime changed since it was recorded is parsed
+    again, and the key anti-join drops the rows gold already holds."""
+    import os
+
+    bronze, gold = tmpdirs
+    t1, dst = bronze / "t1.pdf", str(gold / "carrefour_data")
+    t1.write_bytes(_ticket_pdf())
+    assert run_ticket_pipeline(spark, str(bronze), dst) == 3
+
+    def load(group):
+        return _jobs_in_group(spark, group, lambda: run_ticket_pipeline(spark, str(bronze), dst))
+
+    st = os.stat(t1)
+    os.utime(t1, ns=(st.st_atime_ns, st.st_mtime_ns + 5_000_000_000))  # new mtime
+    loaded, jobs = load("rewrite-mtime")
+    assert loaded == 0 and jobs > 0
+    t1.write_bytes(_ticket_pdf() + b"\n")  # new size
+    loaded, jobs = load("rewrite-size")
+    assert loaded == 0 and jobs > 0
+    assert spark.read.parquet(dst).count() == 3
+    # the rewrite is recorded: the next replay is a listing again
+    assert load("rewrite-replay") == (0, 0)
+
+
+def test_listing_skips_the_names_spark_skipped(spark, tmpdirs):
+    """The listing keeps the scan's old rule: the flow's glob, no ``_``- or
+    ``.``-prefixed names, no subdirectories. Each skipped file holds a
+    ticket of its own, so reading any of them would load more rows."""
+    bronze, gold = tmpdirs
+    (bronze / "t1.pdf").write_bytes(_ticket_pdf(1))
+    (bronze / "_partial.pdf").write_bytes(_ticket_pdf(2))
+    (bronze / ".t1.pdf.crc").write_bytes(_ticket_pdf(3))
+    (bronze / ".hidden.pdf").write_bytes(_ticket_pdf(4))
+    (bronze / "junk.txt").write_bytes(_ticket_pdf(5))
+    (bronze / "sub").mkdir()
+    (bronze / "sub" / "t6.pdf").write_bytes(_ticket_pdf(6))
+    dst = gold / "carrefour_data"
+    assert run_ticket_pipeline(spark, str(bronze), str(dst)) == 3
+    assert {r.nro_ticket for r in spark.read.parquet(str(dst)).collect()} == {1}
+    record = json.loads((dst / "_loaded.json").read_text())
+    assert list(record) == [str(bronze / "t1.pdf")]

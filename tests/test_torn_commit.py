@@ -253,3 +253,77 @@ def test_ivm_sink_recovers_from_torn_commit(spark, tmp_path):
         3: (1, Decimal("9.00")),
     }
     assert got == want, f"got {got}"
+
+
+def _tree(root) -> dict[str, bytes]:
+    """Every file under ``root`` by relative path, with its bytes."""
+    out = {}
+    for d, _, files in os.walk(root):
+        for name in files:
+            path = os.path.join(d, name)
+            with open(path, "rb") as f:
+                out[os.path.relpath(path, root)] = f.read()
+    return out
+
+
+def test_ticket_load_recovers_from_torn_listing_record(spark, tmp_path, monkeypatch):
+    """Crash AFTER the publish, before the listing record's swap: the rows
+    are in gold but the record does not name their file. The re-run parses
+    the file again, the key anti-join appends 0 rows, and the record is
+    then written, so the run after that is a listing."""
+    from etl_expenses_spark.pipelines import run_ticket_pipeline
+    from tests.test_parsers import TICKET_TEXT
+
+    bronze, gold = tmp_path / "bronze", tmp_path / "gold"
+    bronze.mkdir()
+    (bronze / "t1.pdf").write_bytes(b"%PDF" + TICKET_TEXT.encode())
+    record = os.path.join(str(gold), "_loaded.json")
+    real = os.replace
+
+    def torn(src, dst, *a, **kw):
+        if os.path.abspath(str(dst)) == record:
+            raise OSError("torn commit (injected): crash before record swap")
+        return real(src, dst, *a, **kw)
+
+    monkeypatch.setattr(os, "replace", torn)
+    with pytest.raises(OSError, match="before record swap"):
+        run_ticket_pipeline(spark, str(bronze), str(gold))
+    monkeypatch.setattr(os, "replace", real)
+    assert not os.path.exists(record)
+    assert spark.read.parquet(str(gold)).count() == 3
+
+    assert run_ticket_pipeline(spark, str(bronze), str(gold)) == 0
+    assert spark.read.parquet(str(gold)).count() == 3
+    with open(record) as f:
+        assert list(json.load(f)) == [str(bronze / "t1.pdf")]
+    assert run_ticket_pipeline(spark, str(bronze), str(gold)) == 0
+
+
+def test_failed_staged_write_leaves_gold_untouched(spark, tmp_path):
+    """A write that fails inside its Spark job publishes nothing: gold is
+    byte-identical to before, this call's stage is gone, and another
+    writer's stage under ``_staging`` is left as it was."""
+    from etl_expenses_spark.operators.merge import merge_append
+
+    gold = str(tmp_path / "gold")
+    first = spark.createDataFrame([(1, "a"), (2, "b")], "k long, v string")
+    assert merge_append(first, gold, keys=["k"]) == 2
+    before = _tree(gold)
+    failing = spark.createDataFrame([(3, "c"), (4, "d")], "k long, v string").withColumn(
+        "v", F.when(F.col("k") == 4, F.raise_error(F.lit("boom"))).otherwise(F.col("v"))
+    )
+    with pytest.raises(Exception, match="boom"):
+        merge_append(failing, gold, keys=["k"])
+    assert _tree(gold) == before
+    assert not os.path.exists(os.path.join(gold, "_staging"))
+
+    other = os.path.join(gold, "_staging", "other-writer")
+    os.makedirs(other)
+    with open(os.path.join(other, "part-0.parquet"), "wb") as f:
+        f.write(b"in flight")
+    before = _tree(gold)
+    with pytest.raises(Exception, match="boom"):
+        merge_append(failing, gold, keys=["k"])
+    assert _tree(gold) == before
+    assert os.listdir(os.path.join(gold, "_staging")) == ["other-writer"]
+    assert spark.read.parquet(gold).count() == 2

@@ -67,11 +67,11 @@ def main() -> int:
         q.build(spark, sf_dir).write.format("noop").mode("overwrite").save()
         return time.perf_counter() - t0
 
-    # session warm-up absorbs executor-pool spin-up + codegen init
-    run_once(REGISTRY[args[0]])
-
     rc = 0
     for name in args:
+        # one untimed run per query, just before its window, so no query's
+        # first timed run carries its own plan compile and codegen
+        run_once(REGISTRY[name])
         win = ContentionWindow()
         t0 = time.perf_counter()
         runs = [run_once(REGISTRY[name]) for _ in range(n)]
